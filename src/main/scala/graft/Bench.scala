@@ -383,21 +383,40 @@ object Bench {
     "sample_psis_khat", "event_funnel", "text_cooccurrence_pmi",
     "stat_pinball_loss")
 
+  /** Longest short-summary line. The bench log is parsed from its
+    * last 2000 chars, which must also hold sbt's trailing
+    * `[success] Total time: ...` line (73 chars in r15). */
+  private[graft] val summaryLineBudget = 1800
+
+  /** The short parseable summary line around the `queries` sample
+    * object. */
+  private[graft] def summaryLine(total: Double, staging: Double, restarts: Int,
+      jvmRestarts: Int, nQueries: Int, errors: Seq[String], queries: String,
+      sfDir: String, outPath: String): String = {
+    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${f(total)},"unit":"sec","staging":${f(staging)},"restarts":$restarts,"jvm_restarts":$jvmRestarts,"n_queries":$nQueries,"errors":$errs,"queries":$queries,"sf":"$sfDir","full":"$outPath"}"""
+  }
+
+  private[graft] def sampleJson(times: Map[String, Double], sample: Seq[String]): String =
+    sample.map(k => "\"" + k + "\":" + f(times(k))).mkString("{", ",", "}")
+
   /** The short-summary per-query sample: flagships, then the round's
     * spotlight rows, then the slowest measured rows, deduped, greedily
-    * packed until the assembled summary line would exceed the driver's
-    * capture window (flagships always fit — they come first).
+    * packed until the assembled summary line would exceed
+    * [[summaryLineBudget]]. `fixedChars` is the length of the line with an
+    * empty sample (`{}`), errors array included, so bench errors
+    * shrink the sample instead of pushing the line's front out of the
+    * 2000-char window.
     */
-  private[graft] def summarySample(times: Map[String, Double],
-      budgetChars: Int = 1550): Seq[String] = {
+  private[graft] def summarySample(times: Map[String, Double], fixedChars: Int): Seq[String] = {
     val slowest = times.toSeq.sortBy(-_._2).map(_._1)
     val candidates =
       (flagships ++ spotlight ++ slowest).distinct.filter(times.contains)
     val picked = scala.collection.mutable.ListBuffer.empty[String]
-    var used = 0
+    var used = fixedChars
     candidates.foreach { k =>
-      val cost = k.length + 12 // "name":12.345, incl. quotes+comma
-      if (used + cost <= budgetChars) { picked += k; used += cost }
+      val cost = k.length + f(times(k)).length + 4 // "name":12.345, incl. quotes+comma
+      if (used + cost <= summaryLineBudget) { picked += k; used += cost }
     }
     picked.toList
   }
@@ -456,12 +475,10 @@ object Bench {
     println(json)
     // Short driver-parseable summary — the LAST lines of the run.
     val times = result.times.toMap
-    val sample = summarySample(times)
-      .map(k => "\"" + k + "\":" + f(times(k))).mkString("{", ",", "}")
     val total = result.staging + result.times.map(_._2).sum
-    val errs = result.errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val summary =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","staging":${f(result.staging)},"restarts":${result.restarts},"jvm_restarts":$jvmRestarts,"n_queries":${result.times.size},"errors":$errs,"queries":$sample,"sf":"$sfDir","full":"$outPath"}"""
+    def line(queries: String): String = summaryLine(total, result.staging,
+      result.restarts, jvmRestarts, result.times.size, result.errors, queries, sfDir, outPath)
+    val summary = line(sampleJson(times, summarySample(times, line("{}").length)))
     println(s"BENCH_JSON: $summary")
     println(summary)
   }

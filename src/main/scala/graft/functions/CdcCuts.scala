@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-defined-chunking gate positions in ONE pass per document.
   *
-  * Bit-identical to the exploded formulation it replaces
-  * (dedup_cdc_chunking's hot job):
+  * For documents of 8 or more code points, bit-identical to the
+  * exploded formulation it replaces (dedup_cdc_chunking's hot job):
   *
   * {{{
   *   explode(sequence(8L, len)) AS p
@@ -30,6 +30,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * replayed exactly — and a document with no gate hits yields an EMPTY
   * array, which also retires the left-join + coalesce the grouped
   * formulation needed for those docs.
+  *
+  * Shorter documents deliberately differ: there Spark's bare
+  * `sequence(8L, len)` counts DOWN (step -1) and could emit gate
+  * positions, while the kernel returns an empty array — what the
+  * DuckDB oracle's `generate_series(8, len)` (empty for len < 8)
+  * yields.
   *
   * Why it is faster (guide §1.2 step 2, per-task work): the exploded
   * form pays, PER CHARACTER of the corpus, a generated row, a

@@ -31,16 +31,14 @@ object Extras18 {
       val dir = Streaming.stageDir(s, d, copies = 1, sentinels = false)
       val outDir = Files.createTempDirectory(
         s"graft_fsink_${ProcessHandle.current().pid()}_").toString
-      val q = Streaming.eventStream(s, dir, sch)
+      val w = Streaming.eventStream(s, dir, sch)
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("value"))
         .writeStream
         .format("parquet")
         .option("path", outDir)
-        .option("checkpointLocation", Files.createTempDirectory("graft_fsink_ckpt_").toString)
         .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Streaming.runToEnd(s, w)
       outDir
     })
     s.read.parquet(out)

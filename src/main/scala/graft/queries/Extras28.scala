@@ -157,29 +157,29 @@ object Extras28 {
   def streamIncrementalResume(s: SparkSession, d: String): DataFrame = {
     val (n1, n2) = incResults.computeIfAbsent(d, _ => {
       val src = Files.createTempDirectory("graft_incr_src_")
-      val ckpt = Files.createTempDirectory("graft_incr_ckpt_").toString
       val sch = s.read.parquet(s"$d/orders.parquet").schema
       val totals = new java.util.concurrent.atomic.AtomicLong()
-      def runOnce(): Long = {
+      def runOnce(ckpt: String): Long = {
         totals.set(0L)
-        val q = s.readStream.schema(sch).parquet(src.toString)
+        val w = s.readStream.schema(sch).parquet(src.toString)
           .writeStream
           .foreachBatch { (b: DataFrame, _: Long) =>
             totals.addAndGet(b.count()); ()
           }
-          .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        Streaming.start(s, w, ckpt).awaitTermination()
         totals.get()
       }
-      Files.copy(Paths.get(s"$d/orders.parquet"), src.resolve("part-0.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-      val a = runOnce()
-      Files.copy(Paths.get(s"$d/orders.parquet"), src.resolve("part-1.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-      val b = runOnce()
-      (a, b)
+      // both runs share one checkpoint; it is deleted after the second
+      Streaming.withScratchCheckpoint { ckpt =>
+        Files.copy(Paths.get(s"$d/orders.parquet"), src.resolve("part-0.parquet"),
+          StandardCopyOption.REPLACE_EXISTING)
+        val a = runOnce(ckpt)
+        Files.copy(Paths.get(s"$d/orders.parquet"), src.resolve("part-1.parquet"),
+          StandardCopyOption.REPLACE_EXISTING)
+        val b = runOnce(ckpt)
+        (a, b)
+      }
     })
     orders(s, d)
       .agg(count(lit(1)).as("n_file_rows"))

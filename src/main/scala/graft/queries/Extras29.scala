@@ -176,18 +176,14 @@ object Extras29 {
           src.resolve(f"part-$i.parquet"),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
-      val q = s.readStream.schema(sch)
+      val w = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1").parquet(src.toString)
         .writeStream
         // the batch must be DRIVEN for the source to report rows —
         // numInputRows measures what the batch's action actually read
         .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft_prog_ckpt_").toString)
         .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val progress = q.recentProgress.filter(_.numInputRows > 0)
+      val progress = Streaming.runToEnd(s, w).recentProgress.filter(_.numInputRows > 0)
       (progress.map(_.numInputRows).sum, progress.length.toLong)
     })
     orders(s, d).agg(count(lit(1)).as("n_file_rows"))

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.Tables
 
@@ -122,6 +122,59 @@ object Streaming {
       .withColumn("ets", col("ts").cast("timestamp"))
   }
 
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Runs `body` on `n` fresh scratch checkpoint dirs and deletes them
+    * when it returns or throws. Callers await their queries inside
+    * `body`; a memory sink's table outlives its checkpoint.
+    */
+  private[graft] def withScratchCheckpoints[A](n: Int)(body: Seq[String] => A): A = {
+    val dirs = Seq.fill(n)(Files.createTempDirectory("graft_ckpt_"))
+    try body(dirs.map(_.toString)) finally dirs.foreach(deleteTree)
+  }
+
+  private[graft] def withScratchCheckpoint[A](body: String => A): A =
+    withScratchCheckpoints(1)(dirs => body(dirs.head))
+
+  /** Runs `w` to termination on a scratch checkpoint (see [[start]])
+    * and returns the terminated query. */
+  private[graft] def runToEnd[T](s: SparkSession, w: DataStreamWriter[T]): StreamingQuery =
+    withScratchCheckpoint { ckpt =>
+      val q = start(s, w, ckpt)
+      q.awaitTermination()
+      q
+    }
+
+  private[graft] def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
+
+  /** The one place the engine starts a stream: `w` on checkpoint
+    * `ckpt`, with two session confs latched for the duration of
+    * `.start()` only. `StreamExecution` clones the session at start, so
+    * the query keeps them for its offset and commit logs and its state
+    * stores, while later plans see the restored conf:
+    *
+    * - [[graft.sources.LocalCheckpointFileManager]], which starts no
+    *   processes, as the checkpoint file manager (why: [[runToBatch]]);
+    * - `statePartitions`, when given, as `spark.sql.shuffle.partitions`,
+    *   which streaming latches at query start as its state partition
+    *   count.
+    */
+  private[graft] def start[T](s: SparkSession, w: DataStreamWriter[T], ckpt: String,
+      statePartitions: Option[Int] = None): StreamingQuery = {
+    val confs = statePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toSeq :+
+      (CheckpointManagerKey -> classOf[graft.sources.LocalCheckpointFileManager].getName)
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      w.option("checkpointLocation", ckpt).start()
+    } finally prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
+
   /** Run a streaming frame to completion (AvailableNow) into a memory
     * sink and return the sink contents as a batch DataFrame.
     *
@@ -131,31 +184,24 @@ object Streaming {
     * would allocate 32 state-store instances per stateful operator
     * (×2–4 for a stream-stream join) for replays whose total state is
     * a few thousand rows; the per-store checkpoint/maintenance churn
-    * dominates wall-clock. We latch a small count for the duration of
-    * `.start()` and restore the session conf immediately after (the
-    * running query keeps its latched value; the restored conf applies
-    * only to later batch plans). On a real cluster the same query
-    * would simply start under a shuffle-partition conf sized to its
-    * expected state, set once at deployment.
+    * dominates wall-clock. [[start]] latches a small count for the
+    * duration of `.start()`. On a real cluster the same query would
+    * simply start under a shuffle-partition conf sized to its expected
+    * state, set once at deployment.
+    *
+    * What the churn cost was measured, on a host without the native
+    * Hadoop library: Spark's default checkpoint file manager forks a
+    * `readlink` for every `FileContext` rename and a `chmod` for every
+    * file or dir `RawLocalFileSystem` creates. A JFR
+    * `jdk.ProcessStart` recording of one `batch` benchmark run counted
+    * 1035 forks, about 252 per `stream_tumbling_count` call. Under
+    * [[start]]'s fork-free manager the same run forks 28 times, and a
+    * traced run's `stream.state_commit_ms` falls from 727 to 68 ms and
+    * `stream.wal_commit_ms` from 69 to 5.
     */
   private[graft] def runToBatch(s: SparkSession, df: DataFrame, mode: String,
-      statePartitions: Int = 4): DataFrame = {
-    val name = s"graft_mem_${ctr.incrementAndGet()}"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        df.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .option("checkpointLocation", Files.createTempDirectory("graft_ckpt_").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    s.table(name)
-  }
+      statePartitions: Int = 4): DataFrame =
+    runToBatchAll(s, Seq(df -> mode), statePartitions).head
 
   /** r14: start SEVERAL independent AvailableNow queries and await them
     * together (guide §2.6 — overlap independent jobs). The sequential
@@ -163,28 +209,25 @@ object Streaming {
     * concurrent shape is also the truer multi-sink deployment: one
     * source fanned out to sinks that each keep their own checkpoint.
     * Results are identical — each query is the same isolated
-    * AvailableNow replay into its own memory sink.
+    * AvailableNow replay into its own memory sink. A failure stops the
+    * queries already started before their checkpoints are deleted.
     */
   private[graft] def runToBatchAll(s: SparkSession, dfs: Seq[(DataFrame, String)],
-      statePartitions: Int = 4): Seq[DataFrame] = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val qs =
+      statePartitions: Int = 4): Seq[DataFrame] =
+    withScratchCheckpoints(dfs.size) { ckpts =>
+      val started = scala.collection.mutable.ArrayBuffer.empty[(String, StreamingQuery)]
       try {
-        s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        dfs.map { case (df, mode) =>
+        dfs.zip(ckpts).foreach { case ((df, mode), ckpt) =>
           val name = s"graft_mem_${ctr.incrementAndGet()}"
-          name -> df.writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", Files.createTempDirectory("graft_ckpt_").toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
+          started += name -> start(s,
+            df.writeStream.format("memory").queryName(name).outputMode(mode)
+              .trigger(Trigger.AvailableNow()),
+            ckpt, Some(statePartitions))
         }
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    qs.foreach(_._2.awaitTermination())
-    qs.map { case (name, _) => s.table(name) }
-  }
+        started.foreach(_._2.awaitTermination())
+      } finally started.foreach(_._2.stop())
+      started.map { case (name, _) => s.table(name) }.toSeq
+    }
 
   /** B46 stream_tumbling_count — 1h tumbling windows over the event
     * stream, watermark + append mode (the production shape: state is
@@ -413,17 +456,15 @@ object Streaming {
             max_by(col("last"), struct(col("last.ts"), col("last.id"))).as("last"))
       }
     }
-    val q = s.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(dir)
+    val w = s.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(dir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val merged = mergeBatch(batch,
           if (store.isInitialized) Some(store.read()) else None)
         store.init(merged)
       }
-      .option("checkpointLocation", Files.createTempDirectory("graft_ckpt_").toString)
       .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runToEnd(s, w)
     store.read()
       .select(col("user_id"), col("n_events"),
         (col("cents").cast("double") / 100.0).as("sum_value"),

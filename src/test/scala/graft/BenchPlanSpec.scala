@@ -69,10 +69,18 @@ class BenchPlanSpec extends AnyFunSuite {
     }
   }
 
+  /** The summary line `Bench.main` prints, for `times` and `errors`. */
+  private def summaryLine(times: Map[String, Double], errors: Seq[String]): (Seq[String], String) = {
+    def line(queries: String) = Bench.summaryLine(99999.999, 999.999, 99, 9, times.size,
+      errors, queries, "/data/testdata/sf0.1", "bench_out.json")
+    val sample = Bench.summarySample(times, line("{}").length)
+    (sample, line(Bench.sampleJson(times, sample)))
+  }
+
   test("short-summary sample fits the driver's 2000-char capture window") {
     // full-registry-sized times map with worst-case 4-digit seconds
     val times = SparkEntry.queries.keySet.map(_ -> 9999.999).toMap
-    val sample = Bench.summarySample(times)
+    val (sample, line) = summaryLine(times, Nil)
     // flagships lead (stable contract rows), no duplicates, all measured
     assert(sample.take(6) == Seq("agg_hash_groupby", "join_inner_hash",
       "win_rank", "dedup_exact", "sim_topk_cosine", "text_bm25_rank"))
@@ -80,10 +88,24 @@ class BenchPlanSpec extends AnyFunSuite {
     assert(sample.forall(times.contains))
     // the assembled summary line (sample + the fixed fields) must stay
     // inside the driver's 2000-char log-tail window
-    val qs = sample.map(k => "\"" + k + "\":9999.999").mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":99999.999,"unit":"sec","staging":999.999,"restarts":99,"jvm_restarts":9,"n_queries":${times.size},"errors":[],"queries":$qs,"sf":"/root/testdata/sf0.1","full":"bench_out.json"}"""
     assert(line.length <= 2000, s"summary line ${line.length} chars > 2000")
     // and it must carry far more than the 6 flagships (r14 verdict #2)
     assert(sample.size >= 30, s"only ${sample.size} rows in the sample")
+  }
+
+  test("short-summary line stays inside its budget with errors and 5-digit times") {
+    // times of 10000 s and more take one char more than the 4-digit case
+    val times = SparkEntry.queries.keySet.map(_ -> 12345.678).toMap
+    val errors = SparkEntry.queries.keySet.toSeq.sorted.take(12)
+    val (clean, cleanLine) = summaryLine(times, Nil)
+    val (sample, line) = summaryLine(times, errors)
+    assert(cleanLine.length <= Bench.summaryLineBudget,
+      s"error-free line ${cleanLine.length} chars > ${Bench.summaryLineBudget}")
+    assert(line.length <= Bench.summaryLineBudget,
+      s"line with ${errors.size} errors ${line.length} chars > ${Bench.summaryLineBudget}")
+    assert(errors.forall(e => line.contains("\"" + e + "\"")), "errors array truncated")
+    // the errors' room comes out of the sample, flagships first
+    assert(sample.size < clean.size)
+    assert(sample.take(6) == clean.take(6))
   }
 }

@@ -31,4 +31,21 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
   def sf01: Option[String] = TestSpark.sf01
+
+  /** Runs `body` once under Spark's default streaming checkpoint file
+    * manager and once under the engine's fork-free one
+    * ([[graft.sources.LocalCheckpointFileManager]]), passing a label
+    * for failure messages. */
+  def underEachCheckpointManager(body: String => Unit): Unit = {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    Seq("default manager" -> None,
+      "fork-free manager" -> Some(classOf[graft.sources.LocalCheckpointFileManager].getName))
+      .foreach { case (label, manager) =>
+        val prev = spark.conf.getOption(key)
+        try {
+          manager.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+          body(label)
+        } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      }
+  }
 }
