@@ -1,66 +1,41 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Driver-run benchmark: times every SparkEntry query at the given sf.
+/** The registry benchmark: times every SparkEntry query at the given sf,
+  * in [[SparkEntry.namedQueryMaps]] order, in this one JVM.
   *
-  * JVM lifecycle (r14, after the drift root-cause): the r12/r13
-  * ledgers' ~1.67× fleet-wide drift over the r11-common rows was
-  * suspected to be JVM aging — r14's controlled runs REFUTED that at
-  * the current registry size (code cache plateaus at ~156/528 MB over
-  * 1045 queries, metaspace flat, and a fresh single JVM reproduces the
-  * post-r11 ledger from its first queries; the drift is environmental
-  * — see BASELINE.md r14). The measured mode A/B on an idle machine:
-  * single-JVM 1247 s total / median 0.90 vs the r13 ledger; chunked
-  * fresh-JVM-per-256-queries 1503 s / median 1.13, +28 % per-row
-  * median vs the same-day single run, concentrated at chunk starts
-  * (JIT-cold Spark internals despite the warmup battery). Default is
-  * therefore the SINGLE-JVM run (`SPARK_GRAFT_JVM_EVERY=0`). Chunked
-  * orchestration — the parent plans file-granular chunks of
-  * `SPARK_GRAFT_JVM_EVERY` queries, runs each in a fresh child JVM
-  * (same flags + classpath) and merges the ledgers — remains the
-  * insurance switch if the BENCH_JVM diag lines ever show real aging
-  * again (code-cache/metaspace growth, or late-run uniform inflation
-  * that a SparkSession restart does not clear): it bounds any aging or
-  * environmental transient to one chunk.
-  *
-  * Chunk planning is FILE-granular: queries registered from the same
-  * source file stay in one chunk, so file-local memoized staging
-  * (computeIfAbsent temp dirs) is never re-paid across a split. Files
-  * that share a memoized cross-file stage are pinned into the same
-  * chunk by the affinity groups below, so each corpus-wide stage runs
-  * exactly once per full run, as before.
+  * One JVM for the whole run: r14's controlled runs found no JVM aging
+  * at the current registry size (code cache plateaus at ~156/528 MB
+  * over 1045 queries, metaspace flat; the r12/r13 ledger drift was
+  * environmental — see BASELINE.md r14), and fresh JVMs per 256-query
+  * chunk measured +28 % per-row median (JIT-cold chunk starts). The
+  * BENCH_JVM diag lines keep the evidence trail.
   *
   * Staging accounting: the corpus-wide one-time stages (shingle
   * aggregates, mined near-dup pairs, CC labels, the BPE merge table,
-  * LPA labels, co-purchase pair stats) are materialized up front in
-  * whichever chunk contains their consumers and reported in the
-  * `"staging"` JSON field (summed across chunks); `value` (the gate
-  * total) still includes it, so round-over-round totals stay
-  * like-for-like. Targeted (`only`) runs now ALSO stage the artifacts
-  * their selection consumes — r13's targeted runs skipped staging, so
-  * a targeted re-time of a staging consumer lazily re-mined the corpus
-  * inside its timed region and was incomparable to the ledger (judge
-  * measured graph_adamic_adar 30.3 s targeted vs 3.6 s ledger).
+  * LPA labels, co-purchase pair stats) are materialized up front and
+  * reported in the `"staging"` JSON field; `value` (the gate total)
+  * still includes it, so round-over-round totals stay like-for-like.
+  * Targeted (`only`) runs also stage the artifacts their selection
+  * consumes — r13's targeted runs skipped staging, so a targeted
+  * re-time of a staging consumer lazily re-mined the corpus inside its
+  * timed region and was incomparable to the ledger (judge measured
+  * graph_adamic_adar 30.3 s targeted vs 3.6 s ledger).
   *
   * Output contract (the r14 fix for the driver's `parsed: null`): the
   * full per-query ledger (~25 KB at 1045 rows) overflows the driver's
   * 2000-char log-tail capture window, which has silently truncated the
   * driver-visible BENCH_JSON since r8. The LAST lines printed are now a
-  * SHORT summary JSON (total/staging/restarts/errors + a 6-query
-  * flagship sample) that fits the window; the full per-query map goes
-  * to the SPARK_GRAFT_BENCH_OUT file (default bench_out.json) and is
-  * printed once, EARLIER, for human log readers.
+  * SHORT summary JSON (total/staging/restarts/errors + a per-query
+  * sample) that fits the window; `jvm_restarts` stays in it, always 0,
+  * for the parsers that read it. The full per-query map goes to the
+  * SPARK_GRAFT_BENCH_OUT file (default bench_out.json) and is printed
+  * once, EARLIER, for human log readers.
   */
 object Bench {
 
   private def newSession(cpus: String, sfDir: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.local(cpus)
     // warm the session (codegen compiler, parquet footer cache, shuffle
     // machinery) so the first measured query isn't charged setup
     s.range(1000).selectExpr("sum(id)").collect()
@@ -68,8 +43,8 @@ object Bench {
     s
   }
 
-  /** UNTIMED synthetic warmup battery run once per fresh JVM before the
-    * timed loop. A fresh child JVM's first ~10-20 queries otherwise pay
+  /** UNTIMED synthetic warmup battery run once per JVM before the
+    * timed loop. A fresh JVM's first ~10-20 queries otherwise pay
     * JIT-cold Spark internals — the r14 chunked-vs-single A/B measured
     * chunk-start rows 2-11× their warm time (event_funnel 13.0 s vs
     * 1.2 s warm) while the fleet median matched at 1.01. The battery
@@ -78,7 +53,7 @@ object Bench {
     * generators, parquet write — with SYNTHETIC plans only: registry
     * queries must not run here, or their lazily-memoized staging would
     * move out of the timed region and break per-row ledger
-    * comparability. ~10-15 s per JVM, not charged to any ledger field.
+    * comparability. ~10-15 s, not charged to any ledger field.
     */
   private def warmJvm(s: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
@@ -173,23 +148,6 @@ object Bench {
       (s, d) => { queries.CoPurchaseStage.pairStats(s, d).count(): Unit }),
   )
 
-  /** Files whose queries share a memoized cross-file cache (a corpus
-    * stage above, or a computeIfAbsent temp dir like Extras24's hetero
-    * .sb staging and RefSurface's text index) — pinned into one chunk
-    * so the cache is built once per full run, exactly as in the
-    * single-JVM ledgers.
-    */
-  private[graft] val affinityGroups: Seq[Set[String]] = Seq(
-    Set("Extras24", "Extras71", "Extras74"), // heteroSbDir + BPE merges
-    Set("RefSurface", "Extras52", "Extras53", "Extras54", "Extras56",
-      "Extras60"), // staged .sb dir + text index
-    Set("DedupExtras", "Extras32", "Extras38", "Extras55", "Extras62",
-      "Extras99", "Extras107", "Pipeline"), // shingle/ngram/CC stages
-    Set("Extras101", "Extras104", "Extras109"), // LPA edge+label stage
-    Set("Extras63", "Extras121", "Extras123", "Extras127",
-      "Extras145"), // co-purchase pair/degree stage
-  )
-
   /** Stage every artifact consumed by `names`; returns (seconds, staged
     * stage names). A failure is reported, not fatal — the consumers
     * then lazily stage inside their own timed region (and will show it).
@@ -215,9 +173,8 @@ object Bench {
       times: Seq[(String, Double)], staging: Double, restarts: Int,
       errors: Seq[String])
 
-  /** Time `names` (in order) on fresh sessions in THIS JVM — the inner
-    * loop shared by child, targeted, and legacy single-JVM modes.
-    */
+  /** Time `names` in order, restarting the session every
+    * `restartEvery` queries. */
   private def runTimed(names: Seq[String], sfDir: String, cpus: String,
       restartEvery: Int): RunResult = {
     var spark = newSession(cpus, sfDir)
@@ -264,102 +221,21 @@ object Bench {
     RunResult(times, stagingSec, restarts, failed.toList)
   }
 
-  /** The full-run query order: per-file registration order, with
-    * affinity-grouped files pulled together at the first member's
-    * position. Returns (fileName, keys) units.
-    */
-  private[graft] def plannedUnits: Seq[(String, Seq[String])] = {
-    val groupOf: Map[String, Int] = affinityGroups.zipWithIndex
-      .flatMap { case (g, i) => g.map(_ -> i) }.toMap
-    val files = SparkEntry.namedQueryMaps
-    val consumed = scala.collection.mutable.Set.empty[String]
-    files.flatMap { case (name, _) =>
-      if (consumed(name)) Nil
-      else groupOf.get(name) match {
-        case Some(g) =>
-          // ONE unit for the whole affinity group — planChunks never
-          // splits inside a unit, so the shared cache stays co-chunked
-          val members = files.filter { case (n, _) =>
-            groupOf.get(n).contains(g)
-          }
-          members.foreach { case (n, _) => consumed += n }
-          Seq((s"group$g",
-            members.flatMap { case (_, m) => m.keys.toSeq.sorted }))
-        case None =>
-          consumed += name
-          Seq((name, files.find(_._1 == name).get._2.keys.toSeq.sorted))
-      }
-    }
-  }
-
-  /** Split the planned units into chunks of >= jvmEvery queries. */
-  private[graft] def planChunks(jvmEvery: Int): Seq[Seq[String]] = {
-    val chunks = scala.collection.mutable.ListBuffer.empty[Seq[String]]
-    var cur = scala.collection.mutable.ListBuffer.empty[String]
-    plannedUnits.foreach { case (_, keys) =>
-      cur ++= keys
-      if (cur.size >= jvmEvery) { chunks += cur.toList; cur = scala.collection.mutable.ListBuffer.empty }
-    }
-    if (cur.nonEmpty) chunks += cur.toList
-    chunks.toList
-  }
-
-  /** Spawn one fresh child JVM per chunk (same flags + classpath as
-    * this one), collect its partial ledger from a temp file. Child
-    * protocol: env SPARK_GRAFT_BENCH_CHILD=<names file>, partial
-    * written to SPARK_GRAFT_BENCH_PARTIAL as plain lines
-    * (`Q name sec` / `STAGING sec` / `RESTARTS n` / `ERROR name`).
-    */
-  private def runChunked(chunks: Seq[Seq[String]], sfDir: String): RunResult = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    val cp = System.getProperty("java.class.path")
-    val allTimes = scala.collection.mutable.ListBuffer.empty[(String, Double)]
-    val allErrors = scala.collection.mutable.ListBuffer.empty[String]
-    var staging = 0.0
-    var restarts = 0
-    chunks.zipWithIndex.foreach { case (names, ci) =>
-      val namesFile = java.nio.file.Files.createTempFile("graft_bench_chunk", ".txt")
-      java.nio.file.Files.write(namesFile, names.mkString("\n").getBytes("UTF-8"))
-      val partial = java.nio.file.Files.createTempFile("graft_bench_partial", ".txt")
-      val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_BENCH_CHILD", namesFile.toString)
-      pb.environment().put("SPARK_GRAFT_BENCH_PARTIAL", partial.toString)
-      pb.inheritIO() // BENCH_JVM / BENCH_ERROR diag lines reach the round log
-      System.err.println(s"BENCH_CHUNK[$ci]: ${names.size} queries, fresh JVM")
-      val rc = pb.start().waitFor()
-      if (rc != 0) {
-        allErrors += s"_chunk${ci}_rc$rc"
-        System.err.println(s"BENCH_ERROR: chunk $ci exited rc=$rc")
-      }
-      java.nio.file.Files.readAllLines(partial).asScala.foreach { line =>
-        line.split(" ", 3) match {
-          case Array("Q", name, sec) => allTimes += (name -> sec.toDouble)
-          case Array("STAGING", sec) => staging += sec.toDouble
-          case Array("RESTARTS", n) => restarts += n.toInt
-          case Array("ERROR", name) => allErrors += name
-          case _ => ()
-        }
-      }
-      java.nio.file.Files.deleteIfExists(namesFile)
-      java.nio.file.Files.deleteIfExists(partial)
-    }
-    RunResult(allTimes.toList, staging, restarts, allErrors.toList)
-  }
+  /** The full-run query order: the registry files in
+    * [[SparkEntry.namedQueryMaps]] order, each file's keys sorted. */
+  private[graft] def fullRunOrder: Seq[String] =
+    SparkEntry.namedQueryMaps.flatMap(_._2.keys.toSeq.sorted)
 
   // 3-decimal seconds: ~ms resolution is all the comparison needs
   private def f(v: Double): String =
     "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
-  private def toJson(r: RunResult, sfDir: String, jvmRestarts: Int): String = {
+  private def toJson(r: RunResult, sfDir: String): String = {
     val qs = r.times.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     val total = r.staging + r.times.map(_._2).sum
     val errs = r.errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${f(total)},"unit":"sec","staging":${f(r.staging)},"restarts":${r.restarts},"jvm_restarts":$jvmRestarts,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${f(total)},"unit":"sec","staging":${f(r.staging)},"restarts":${r.restarts},"jvm_restarts":0,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
   }
 
   /** Flagship sample for the short summary line — stable early-contract
@@ -391,10 +267,10 @@ object Bench {
   /** The short parseable summary line around the `queries` sample
     * object. */
   private[graft] def summaryLine(total: Double, staging: Double, restarts: Int,
-      jvmRestarts: Int, nQueries: Int, errors: Seq[String], queries: String,
+      nQueries: Int, errors: Seq[String], queries: String,
       sfDir: String, outPath: String): String = {
     val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${f(total)},"unit":"sec","staging":${f(staging)},"restarts":$restarts,"jvm_restarts":$jvmRestarts,"n_queries":$nQueries,"errors":$errs,"queries":$queries,"sf":"$sfDir","full":"$outPath"}"""
+    s"""{"metric":"total","value":${f(total)},"unit":"sec","staging":${f(staging)},"restarts":$restarts,"jvm_restarts":0,"n_queries":$nQueries,"errors":$errs,"queries":$queries,"sf":"$sfDir","full":"$outPath"}"""
   }
 
   private[graft] def sampleJson(times: Map[String, Double], sample: Seq[String]): String =
@@ -426,44 +302,16 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val restartEvery = scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_RESTART_EVERY", "96").trim.toInt).getOrElse(96)
-    val jvmEvery = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_JVM_EVERY", "0").trim.toInt).getOrElse(128)
-
-    // ---- child mode: time the given chunk in this (fresh) JVM --------
-    sys.env.get("SPARK_GRAFT_BENCH_CHILD").foreach { namesFile =>
-      import scala.jdk.CollectionConverters._
-      val names = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get(namesFile)).asScala.toSeq.filter(_.nonEmpty)
-      val r = runTimed(names, sfDir, cpus, restartEvery)
-      val out = new StringBuilder
-      r.times.foreach { case (n, s) => out ++= s"Q $n ${f(s)}\n" }
-      out ++= s"STAGING ${f(r.staging)}\n"
-      out ++= s"RESTARTS ${r.restarts}\n"
-      r.errors.foreach(n => out ++= s"ERROR $n\n")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(sys.env("SPARK_GRAFT_BENCH_PARTIAL")),
-        out.toString.getBytes("UTF-8"))
-      return
-    }
 
     // optional comma-list of query names for targeted timing runs
     val only: Option[Set[String]] =
       args.headOption.filter(_.nonEmpty).map(_.split(",").map(_.trim).toSet)
 
-    val (result, jvmRestarts) = only match {
-      case Some(sel) =>
-        // targeted: one JVM, registry order, consumer staging included
-        val names = plannedUnits.flatMap(_._2).filter(sel)
-        (runTimed(names, sfDir, cpus, restartEvery), 0)
-      case None if jvmEvery <= 0 =>
-        // legacy single-JVM full run (the drift A/B baseline)
-        (runTimed(plannedUnits.flatMap(_._2), sfDir, cpus, restartEvery), 0)
-      case None =>
-        val chunks = planChunks(jvmEvery)
-        (runChunked(chunks, sfDir), chunks.size - 1)
-    }
+    // targeted runs keep registry order and stage what they consume
+    val names = only.fold(fullRunOrder)(sel => fullRunOrder.filter(sel))
+    val result = runTimed(names, sfDir, cpus, restartEvery)
 
-    val json = toJson(result, sfDir, jvmRestarts)
+    val json = toJson(result, sfDir)
     // Full ledger: file sink (authoritative) + ONE plain print for human
     // log readers — NOT last, so its ~25 KB cannot push the parseable
     // summary out of the driver's 2000-char log-tail window.
@@ -477,7 +325,7 @@ object Bench {
     val times = result.times.toMap
     val total = result.staging + result.times.map(_._2).sum
     def line(queries: String): String = summaryLine(total, result.staging,
-      result.restarts, jvmRestarts, result.times.size, result.errors, queries, sfDir, outPath)
+      result.restarts, result.times.size, result.errors, queries, sfDir, outPath)
     val summary = line(sampleJson(times, summarySample(times, line("{}").length)))
     println(s"BENCH_JSON: $summary")
     println(summary)

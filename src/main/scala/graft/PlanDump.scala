@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-14 measurement tool (guide §1.3/§7.2): writes
   * `.explain("formatted")` of named registry queries to
   * `<outDir>/<name>_<tag>.txt` so before/after plan shapes are
@@ -15,13 +13,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, namesCsv) = args.take(4)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus, logLevel = "ERROR")
     val registry = SparkEntry.queries
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     namesCsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Round-14 measurement tool (guide §1/§7): runs named registry queries
   * once (warm session) and prints every Spark job's wall time with its
@@ -14,13 +13,7 @@ object ProfileRun {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, namesCsv) = args.take(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(cpus, logLevel = "ERROR")
     // warm like the bench
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(10).count()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builder-side scale fixture generator: synthesizes sf{N×} data by
@@ -48,13 +48,8 @@ object ScaleUp {
     val Array(src, dst, copiesS) = args.take(3)
     val noiseText = args.length == 4 && args(3) == "--noise-text"
     val copies = copiesS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"),
+      shufflePartitions = Some("8"))
 
     // per-domain shift bases (max key + 1), read once from the source
     def maxOf(table: String, col0: String): Long =

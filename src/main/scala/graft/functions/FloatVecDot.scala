@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -71,14 +70,16 @@ case class FloatVecDot(left: Expression, right: Expression)
 object FloatVecDot {
   val name = "graft_vec_dot"
 
-  /** Register `graft_vec_dot` in the session's function registry so
-    * query code can use it via expr("graft_vec_dot(a, b)").
+  /** `graft_vec_dot(a, b)` over two SQL column expressions. */
+  def dot(a: String, b: String): Column =
+    org.apache.spark.sql.functions.expr(s"$name($a, $b)")
+
+  /** DuckDB mirror of [[dot]] over two 64-element list expressions:
+    * the same double products, folded in the same index order, so the
+    * oracle's result is bit-identical.
     */
-  def register(s: SparkSession): Unit =
-    Registration.once(s, name) {
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[FloatVecDot].getName, name),
-        (children: Seq[Expression]) => FloatVecDot(children(0), children(1)))
-    }
+  def dotSql(a: String, b: String): String =
+    s"""list_reduce(list_transform(generate_series(1, 64),
+       |    i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)),
+       |    (x, y) -> x + y)""".stripMargin
 }

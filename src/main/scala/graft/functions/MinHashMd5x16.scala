@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -137,12 +135,4 @@ case class MinHashMd5x16(child: Expression) extends UnaryExpression {
 
 object MinHashMd5x16 {
   val name = "graft_bbit_minhash16"
-
-  def register(s: SparkSession): Unit =
-    Registration.once(s, name) {
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[MinHashMd5x16].getName, name),
-        (children: Seq[Expression]) => MinHashMd5x16(children.head))
-    }
 }

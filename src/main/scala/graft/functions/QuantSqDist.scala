@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -78,15 +76,4 @@ case class QuantSqDist(left: Expression, right: Expression)
 
 object QuantSqDist {
   val name = "graft_qsqdist"
-
-  /** Register `graft_qsqdist` so query code can use it via
-    * expr("graft_qsqdist(x, y)").
-    */
-  def register(s: SparkSession): Unit =
-    Registration.once(s, name) {
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[QuantSqDist].getName, name),
-        (children: Seq[Expression]) => QuantSqDist(children(0), children(1)))
-    }
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -142,13 +140,6 @@ case class TokenHash64(child: Expression) extends UnaryExpression {
 
 object TokenHash64 {
   val name = "graft_tokenhash64"
-  def register(s: SparkSession): Unit =
-    Registration.once(s, name) {
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[TokenHash64].getName, name),
-        (children: Seq[Expression]) => TokenHash64(children.head))
-    }
 }
 
 /** Native Catalyst expression: distinct 3-token shingle hashes of a
@@ -188,11 +179,4 @@ case class ShingleHash3(child: Expression) extends UnaryExpression {
 
 object ShingleHash3 {
   val name = "graft_shingle3"
-  def register(s: SparkSession): Unit =
-    Registration.once(s, name) {
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[ShingleHash3].getName, name),
-        (children: Seq[Expression]) => ShingleHash3(children.head))
-    }
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -78,11 +76,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
 object SimHash64 {
   val name = "graft_simhash64"
-  def register(s: SparkSession): Unit =
-    Registration.once(s, name) {
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[SimHash64].getName, name),
-        (children: Seq[Expression]) => SimHash64(children.head))
-    }
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -115,11 +113,4 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
 
 object SimHashSig {
   val name = "graft_simhash_sig"
-  def register(s: SparkSession): Unit =
-    Registration.once(s, name) {
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[SimHashSig].getName, name),
-        (children: Seq[Expression]) => SimHashSig(children.head))
-    }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -64,11 +62,4 @@ case class ZOrder2(left: Expression, right: Expression) extends BinaryExpression
 
 object ZOrder2 {
   val name = "graft_zorder2"
-  def register(s: SparkSession): Unit =
-    Registration.once(s, name) {
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[ZOrder2].getName, name),
-        (children: Seq[Expression]) => ZOrder2(children(0), children(1)))
-    }
 }

@@ -81,7 +81,7 @@ object AsofJoin {
 }
 
 /** Plans the logical [[AsofJoin]] as [[AsofJoinExec]]. Registered per
-  * session via [[AsofJoinStrategy.register]] (experimental strategies
+  * session via [[graft.GraftExtensions.register]] (experimental strategies
   * are prepended to the built-in ones).
   */
 object AsofJoinStrategy extends SparkStrategy {
@@ -90,9 +90,6 @@ object AsofJoinStrategy extends SparkStrategy {
       AsofJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, tie) :: Nil
     case _ => Nil
   }
-  def register(s: SparkSession): Unit =
-    if (!s.experimental.extraStrategies.contains(this))
-      s.experimental.extraStrategies = s.experimental.extraStrategies :+ this
 }
 
 /** Physical merge as-of join. Requirements mirror SortMergeJoinExec:

@@ -1,8 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BinaryExpression, EqualTo, Expression, ExpressionInfo, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BinaryExpression, EqualTo, Expression, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan}
@@ -86,19 +85,9 @@ object TextIndex {
 
   val name = "graft_text_search"
   val prefixName = "graft_token_prefix"
-  @volatile private var registered = Set.empty[SparkSession]
-  def registerFunction(s: SparkSession): Unit =
-    if (!registered.contains(s)) synchronized {
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftTextSearch].getName, name),
-        (children: Seq[Expression]) => GraftTextSearch(children(0), children(1)))
-      s.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(prefixName),
-        new ExpressionInfo(classOf[GraftTokenPrefix].getName, prefixName),
-        (children: Seq[Expression]) => GraftTokenPrefix(children(0), children(1)))
-      registered += s
-    }
+  /** Delegate to [[graft.GraftExtensions.register]], which installs
+    * both text functions with the rest of the kernel table. */
+  def registerFunction(spark: SparkSession): Unit = graft.GraftExtensions.register(spark)
 }
 
 /** Case-insensitive substring predicate (see [[TextIndex]]). */

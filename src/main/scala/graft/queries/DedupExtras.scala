@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** Additional dedup + similarity-search operators for the training-data
   * pipeline (builder brief): exact n-gram Jaccard, SimHash, embedding
@@ -17,19 +18,6 @@ import graft.Tables._
   * (band join on signature bands) and sim_topk_ivf (inverted cells).
   */
 object DedupExtras {
-
-  /** Exact left-fold double dot product via the codegen'd native
-    * expression (bit-identical to the DuckDB list_reduce mirror; see
-    * [[graft.functions.FloatVecDot]]).
-    */
-  private def dotD(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.FloatVecDot.register(s)
-    expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
-  }
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(generate_series(1, 64),
-       |    i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)),
-       |    (x, y) -> x + y)""".stripMargin
 
   // (the interpreted string-shingle HOF chain previously here moved to
   // graft.functions.ShingleHash3 — one codegen'd pass; Jaccard over the
@@ -68,7 +56,6 @@ object DedupExtras {
     * it, which [[ShingleStage]] stages once).
     */
   private[graft] def shingles(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ShingleHash3.register(s)
     documents(s, d)
       .select(col("doc_id"),
         explode(expr(s"${graft.functions.ShingleHash3.name}(text)")).as("shingle"))
@@ -167,7 +154,6 @@ object DedupExtras {
     * all pairs — fine at the sf0.01 gate, ground truth only.
     */
   def dedupSimhash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.SimHashSig.register(s)
     val sigs = documents(s, d)
       // the whole signature (token split, string de-dup, tid fold, two
       // 32-bit avalanches, 64-channel vote) fuses into the scan stage
@@ -291,7 +277,7 @@ object DedupExtras {
     // expanded corpus. Ties break toward the lower cent_id.
     val cells = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("embedding"), col("cent_id"),
-        dotD(s, "embedding", "cent_emb").as("cdist"))
+        dot("embedding", "cent_emb").as("cdist"))
       .groupBy("vec_id")
       .agg(
         slice(sort_array(collect_list(struct((-col("cdist")).as("nd"), col("cent_id")))),
@@ -308,7 +294,7 @@ object DedupExtras {
       .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
       .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
       .select(col("vec_a"), col("vec_b"),
-        round(dotD(s, "emb_a", "emb_b"), 6).as("sim"))
+        round(dot("emb_a", "emb_b"), 6).as("sim"))
       .filter(col("sim") >= 0.4)
       .orderBy("vec_a", "vec_b")
   }
@@ -323,16 +309,16 @@ object DedupExtras {
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
     a.join(b, col("vec_a") < col("vec_b") &&
-        round(dotD(s, "emb_a", "emb_b"), 6) >= 0.4)
+        round(dot("emb_a", "emb_b"), 6) >= 0.4)
       .select(col("vec_a"), col("vec_b"),
-        round(dotD(s, "emb_a", "emb_b"), 6).as("sim"))
+        round(dot("emb_a", "emb_b"), 6).as("sim"))
       .orderBy("vec_a", "vec_b")
   }
   val dedupEmbedCosineSql: String =
     s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  round(${dotSql("a", "b")}, 6) AS sim
+       |  round(${dotSql("a.embedding", "b.embedding")}, 6) AS sim
        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-       |WHERE round(${dotSql("a", "b")}, 6) >= 0.4
+       |WHERE round(${dotSql("a.embedding", "b.embedding")}, 6) >= 0.4
        |ORDER BY vec_a, vec_b""".stripMargin
 
   /** sim_topk_ivf — IVF-style approximate nearest neighbor: the scale
@@ -358,7 +344,7 @@ object DedupExtras {
     // matches the window formulation (highest dist, then lowest cell).
     val assigned = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("embedding"), col("cent_id"),
-        dotD(s, "embedding", "cent_emb").as("cdist"))
+        dot("embedding", "cent_emb").as("cdist"))
       .groupBy("vec_id")
       .agg(
         max_by(col("cent_id"), struct(col("cdist"), -col("cent_id"))).as("cell"),
@@ -370,7 +356,7 @@ object DedupExtras {
     val wc = Window.partitionBy("probe_id").orderBy(col("cdist").desc, col("cent_id").asc)
     val probeCells = probes.crossJoin(broadcast(cents))
       .select(col("probe_id"), col("probe_emb"), col("cent_id"),
-        dotD(s, "probe_emb", "cent_emb").as("cdist"))
+        dot("probe_emb", "cent_emb").as("cdist"))
       .withColumn("crn", row_number().over(wc))
       .filter(col("crn") <= 4)
       .select(col("probe_id"), col("probe_emb"), col("cent_id").as("cell"))
@@ -378,7 +364,7 @@ object DedupExtras {
     probeCells.join(assigned, "cell")
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
-        round(dotD(s, "probe_emb", "embedding"), 6).as("sim"))
+        round(dot("probe_emb", "embedding"), 6).as("sim"))
       .distinct()
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= 5)
@@ -462,7 +448,7 @@ object DedupExtras {
     probes.join(corpus, Seq("band_idx", "band_val"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
-        round(dotD(s, "probe_emb", "embedding"), 6).as("sim"))
+        round(dot("probe_emb", "embedding"), 6).as("sim"))
       .distinct()
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= 5)

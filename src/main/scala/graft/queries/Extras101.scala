@@ -183,7 +183,6 @@ object Extras101 {
     * query adds truncates executedPlan at a Scan ExistingRDD).
     */
   def embedMatryoshkaTop(s: SparkSession, d: String): DataFrame = {
-    graft.functions.FloatVecDot.register(s)
     val e = embeddings(s, d)
     val pq = e.filter(col("vec_id") < MatProbeBudget)
       .select(col("vec_id").as("qid"),

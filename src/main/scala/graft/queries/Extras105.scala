@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** 105th wave — the ANN quality/cost curve: recall@10 and candidate
   * fraction of the IVF route as a function of nprobe. sim_topk_ivf IS
@@ -32,9 +33,6 @@ object Extras105 {
     * documents why nprobe=constant keeps production ANN sublinear.
     */
   def embedAnnRecallCurve(s: SparkSession, d: String): DataFrame = {
-    graft.functions.FloatVecDot.register(s)
-    def dot(a: String, b: String) =
-      expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
     val e = embeddings(s, d)
     val cents = e.filter(col("vec_id") < AnnCells)
       .select(col("vec_id").as("cell"), col("embedding").as("cemb"))
@@ -83,10 +81,6 @@ object Extras105 {
       .orderBy("nprobe")
   }
   val embedAnnRecallCurveSql: String = {
-    def dot(a: String, b: String) =
-      s"""list_reduce(list_transform(generate_series(1, 64),
-         |      i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)),
-         |      (x, y) -> x + y)""".stripMargin
     val levels = AnnNprobeLevels.mkString(", ")
     s"""WITH cents AS (
        |  SELECT vec_id AS cell, embedding FROM embeddings
@@ -95,7 +89,7 @@ object Extras105 {
        |  SELECT vec_id AS tid, cell FROM (
        |    SELECT t.vec_id, c.cell,
        |      row_number() OVER (PARTITION BY t.vec_id
-       |        ORDER BY round(${dot("t", "c")}, 6) DESC, c.cell ASC) AS rn
+       |        ORDER BY round(${dotSql("t.embedding", "c.embedding")}, 6) DESC, c.cell ASC) AS rn
        |    FROM embeddings t CROSS JOIN cents c) x WHERE rn = 1),
        |probes AS (
        |  SELECT vec_id AS qid, embedding FROM embeddings
@@ -104,11 +98,11 @@ object Extras105 {
        |  SELECT qid, cell, rc FROM (
        |    SELECT p.qid, c.cell,
        |      row_number() OVER (PARTITION BY p.qid
-       |        ORDER BY round(${dot("p", "c")}, 6) DESC, c.cell ASC) AS rc
+       |        ORDER BY round(${dotSql("p.embedding", "c.embedding")}, 6) DESC, c.cell ASC) AS rc
        |    FROM probes p CROSS JOIN cents c) x WHERE rc <= 8),
        |scored AS (
        |  SELECT p.qid, t.vec_id AS tid, a.cell,
-       |    round(${dot("p", "t")}, 6) AS sim
+       |    round(${dotSql("p.embedding", "t.embedding")}, 6) AS sim
        |  FROM probes p
        |  JOIN embeddings t ON t.vec_id <> p.qid
        |  JOIN asg a ON a.tid = t.vec_id),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** 108th wave — what does vector COMPRESSION cost retrieval? The
   * quantization rows (C12's int8 audit, C94's sign-bit packing) say
@@ -35,9 +36,6 @@ object Extras108 {
     * plan (the Extras101.embedMatryoshkaTop pattern).
     */
   def embedQuantizationScored(s: SparkSession, d: String): DataFrame = {
-    graft.functions.FloatVecDot.register(s)
-    def dot(a: String, b: String) =
-      expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
     val q8 = "transform(embedding, x -> cast(greatest(least(" +
       "floor(cast(x as double) * 127 + 0.5), 127), -127) as float))"
     val bits = "transform(embedding, x -> cast(if(x > 0f, 1, 0) as float))"
@@ -83,10 +81,6 @@ object Extras108 {
       .orderBy("scheme")
   }
   val embedQuantizationRecallSql: String = {
-    def dot(a: String, b: String) =
-      s"""list_reduce(list_transform(generate_series(1, 64),
-         |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)),
-         |      (x, y) -> x + y)""".stripMargin
     s"""WITH rep AS (
        |  SELECT vec_id, embedding,
        |    list_transform(embedding, x -> CAST(greatest(least(
@@ -102,10 +96,10 @@ object Extras108 {
        |  FROM rep),
        |scored AS (
        |  SELECT p.vec_id AS qid, t.vec_id AS tid,
-       |    round(${dot("p.embedding", "t.embedding")}, 6) AS fsim,
-       |    CAST(${dot("p.q8", "t.q8")} AS BIGINT) AS qsim,
+       |    round(${dotSql("p.embedding", "t.embedding")}, 6) AS fsim,
+       |    CAST(${dotSql("p.q8", "t.q8")} AS BIGINT) AS qsim,
        |    64 - p.nb - t.nb
-       |      + 2 * CAST(${dot("p.bits", "t.bits")} AS BIGINT) AS bsim
+       |      + 2 * CAST(${dotSql("p.bits", "t.bits")} AS BIGINT) AS bsim
        |  FROM rep2 p JOIN rep2 t ON t.vec_id <> p.vec_id
        |  WHERE p.vec_id < $QuantProbeBudget),
        |sv AS (

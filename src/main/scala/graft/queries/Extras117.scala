@@ -187,7 +187,6 @@ object Extras117 {
     * signature ([[DedupExtras.simhashSigsCtePrefix]]).
     */
   def dedupSimhashHammingProfile(s: SparkSession, d: String): DataFrame = {
-    graft.functions.SimHashSig.register(s)
     val sample = documents(s, d).filter(col("doc_id") < 500)
       .withColumn("sig", expr(s"${graft.functions.SimHashSig.name}(text)"))
       .select(col("doc_id"), col("sig"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.dotSql
 
 /** Wave 18 (C464–C469): leakage-free splits, ANN confidence margins,
   * rolling correlation, referential-integrity audits, climatology
@@ -38,11 +39,6 @@ object Extras118 {
       |  CAST(sum(n_chars) AS BIGINT) AS total_chars
       |FROM documents GROUP BY 1 ORDER BY split""".stripMargin
 
-  private def dotSqlCols(a: String, b: String): String =
-    s"""list_reduce(list_transform(generate_series(1, 64),
-       |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)),
-       |      (x, y) -> x + y)""".stripMargin
-
   /** C465 sim_topk_margin — retrieval CONFIDENCE profile: per probe,
     * the margin between the best and second-best exact cosine. A thin
     * margin means the nearest neighbor is ambiguous (rerank or abstain
@@ -50,7 +46,6 @@ object Extras118 {
     * window, rn ≤ 2 pivoted by conditional aggregation.
     */
   def simTopkMargin(s: SparkSession, d: String): DataFrame = {
-    graft.functions.FloatVecDot.register(s)
     val emb = embeddings(s, d)
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
@@ -72,9 +67,9 @@ object Extras118 {
   val simTopkMarginSql: String =
     s"""WITH ranked AS (
        |  SELECT p.vec_id AS probe_id,
-       |    round(${dotSqlCols("p.embedding", "e.embedding")}, 6) AS sim,
+       |    round(${dotSql("p.embedding", "e.embedding")}, 6) AS sim,
        |    row_number() OVER (PARTITION BY p.vec_id
-       |      ORDER BY round(${dotSqlCols("p.embedding", "e.embedding")}, 6) DESC,
+       |      ORDER BY round(${dotSql("p.embedding", "e.embedding")}, 6) DESC,
        |               e.vec_id ASC) AS rn
        |  FROM embeddings p JOIN embeddings e
        |    ON p.vec_id < 10 AND e.vec_id <> p.vec_id)
@@ -245,7 +240,6 @@ object Extras118 {
     * corpus like C461; oracled end-to-end.
     */
   def dedupBandWidthSweep(s: SparkSession, d: String): DataFrame = {
-    graft.functions.SimHashSig.register(s)
     val sample = documents(s, d).filter(col("doc_id") < 500)
       .withColumn("sig", expr(s"${graft.functions.SimHashSig.name}(text)"))
       .select(col("doc_id"), col("sig"))

@@ -66,7 +66,6 @@ object Extras120 {
     * contract. One scan, one tiny aggregate.
     */
   def embedNormAudit(s: SparkSession, d: String): DataFrame = {
-    graft.functions.FloatVecDot.register(s)
     embeddings(s, d)
       .withColumn("nsq",
         expr(s"${graft.functions.FloatVecDot.name}(embedding, embedding)"))

@@ -1,24 +1,16 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** Wave 23 (C491–C496): embedding-similarity profiling, trimmed means,
   * window EXCLUDE emulation, Cramér–von Mises testing, rich-club
   * connectivity, and moving-average cross screening.
   */
 object Extras123 {
-
-  private def dotD(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.FloatVecDot.register(s)
-    expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
-  }
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(generate_series(1, 64),
-       |    i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)),
-       |    (x, y) -> x + y)""".stripMargin
 
   /** C491 embed_cosine_histogram — the similarity-separability
     * diagnostic for embedding spaces (cosine analogue of the C461
@@ -33,13 +25,13 @@ object Extras123 {
     val a = sample.select(col("vec_id").as("va"), col("embedding").as("ea"))
     val b = sample.select(col("vec_id").as("vb"), col("embedding").as("eb"))
     a.join(b, col("va") < col("vb"))
-      .select(floor(dotD(s, "ea", "eb") * 10).cast("long").as("bucket"))
+      .select(floor(dot("ea", "eb") * 10).cast("long").as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("bucket")
   }
   val embedCosineHistogramSql: String = {
-    val dot = dotSql("a", "b")
+    val dot = dotSql("a.embedding", "b.embedding")
     s"""WITH sample AS (SELECT * FROM embeddings WHERE vec_id < 500)
        |SELECT CAST(floor(($dot) * 10) AS BIGINT) AS bucket, count(*) AS n_pairs
        |FROM sample a JOIN sample b ON a.vec_id < b.vec_id

@@ -1,20 +1,16 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** Wave 24 (C497–C502): k-sample rank testing, sequential-pattern
   * mining, minority oversampling, time-series peak detection, triplet
   * hard-negative mining, and Cochran's Q.
   */
 object Extras124 {
-
-  private def dotD(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.FloatVecDot.register(s)
-    expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
-  }
 
   /** C497 stat_kruskal_wallis — k-sample rank test across ALL five
     * event types (the ANOVA-shaped extension of C168 Mann–Whitney),
@@ -254,7 +250,7 @@ object Extras124 {
     val pairs = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
         col("label").as("b_label"))
       .join(broadcast(anchors), col("a_id") =!= col("b_id"))
-      .withColumn("sim", dotD(s, "a_emb", "b_emb"))
+      .withColumn("sim", dot("a_emb", "b_emb"))
     pairs.groupBy("a_id")
       .agg(
         expr("min_by(b_id, struct(sim, b_id)) FILTER (WHERE b_label = a_label)")
@@ -269,9 +265,7 @@ object Extras124 {
       .orderBy("a_id")
   }
   val embedTripletMiningSql: String = {
-    val dot = """list_reduce(list_transform(generate_series(1, 64),
-       |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)),
-       |      (x, y) -> x + y)""".stripMargin
+    val dot = dotSql("a.embedding", "b.embedding")
     s"""WITH pairs AS (
       |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
       |    a.label AS a_label, b.label AS b_label,

@@ -2,22 +2,18 @@ package graft.queries
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.functions.FloatVecDot.dot
 
 /** Wave 26 (C509–C513): effect sizes, kNN-graph hub auditing,
   * multi-character CSV delimiters, the Pettitt changepoint test, and
   * lead-time percentile profiles.
   */
 object Extras126 {
-
-  private def dotD(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.FloatVecDot.register(s)
-    expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
-  }
 
   /** C509 stat_cohens_d — standardized effect size (Cohen's d with the
     * pooled SD, plus the small-sample Hedges' g correction) between
@@ -91,7 +87,7 @@ object Extras126 {
     val a = sample.select(col("vec_id").as("va"), col("embedding").as("ea"))
     val b = sample.select(col("vec_id").as("vb"), col("embedding").as("eb"))
     val edges = a.join(b, col("va") =!= col("vb"))
-      .withColumn("sim", dotD(s, "ea", "eb"))
+      .withColumn("sim", dot("ea", "eb"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("va").orderBy(col("sim").desc, col("vb"))))
       .filter(col("rn") <= 5)

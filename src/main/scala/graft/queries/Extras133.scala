@@ -1,23 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** Wave 33 (C536–C539): Theil inequality decomposition, two-sample
   * embedding energy distance, audio level-crossing rate, and the
   * Breusch–Pagan heteroscedasticity test.
   */
 object Extras133 {
-
-  private def dotD(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.FloatVecDot.register(s)
-    expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
-  }
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(generate_series(1, 64),
-       |    i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)),
-       |    (x, y) -> x + y)""".stripMargin
 
   /** C536 stat_theil_inequality — Theil-T inequality of customer
     * lifetime spend, decomposed by nation: T = T_between +
@@ -130,13 +122,13 @@ object Extras133 {
     val sample = embeddings(s, d)
       .filter(col("vec_id") < 500 && col("label").isin(0, 1))
       .select(col("vec_id"), col("label"), col("embedding"),
-        dotD(s, "embedding", "embedding").as("nrm"))
+        dot("embedding", "embedding").as("nrm"))
     val a = sample.select(col("vec_id").as("va"), col("label").as("la"),
       col("embedding").as("ea"), col("nrm").as("na"))
     val b = sample.select(col("vec_id").as("vb"), col("label").as("lb"),
       col("embedding").as("eb"), col("nrm").as("nb"))
     val pairs = a.join(b, col("va") < col("vb"))
-      .withColumn("dab", dotD(s, "ea", "eb"))
+      .withColumn("dab", dot("ea", "eb"))
       .selectExpr(
         "CASE WHEN la = lb THEN (CASE WHEN la = 0 THEN 'xx' ELSE 'yy' END) " +
           "ELSE 'xy' END AS kind",
@@ -167,9 +159,9 @@ object Extras133 {
           |  6) AS energy_dist""".stripMargin)
   }
   val embedEnergyDistanceSql: String = {
-    val dab = dotSql("a", "b")
-    val naa = dotSql("a", "a")
-    val nbb = dotSql("b", "b")
+    val dab = dotSql("a.embedding", "b.embedding")
+    val naa = dotSql("a.embedding", "a.embedding")
+    val nbb = dotSql("b.embedding", "b.embedding")
     s"""WITH sample AS (
        |  SELECT vec_id, label, embedding FROM embeddings
        |  WHERE vec_id < 500 AND label IN (0, 1)),

@@ -240,7 +240,6 @@ object Extras147 {
     // — bit-identical to the interpreted aggregate(zip_with(...)) fold
     // it replaces (exact long sums are order-independent), and it stays
     // inside the whole-stage-codegen join loop (guide §4)
-    graft.functions.QuantSqDist.register(s)
     val pairs = q.select(col("vec_id").as("a"), col("qv").as("qa"))
       .join(q.select(col("vec_id").as("b"), col("qv").as("qb")),
         col("a") =!= col("b"))

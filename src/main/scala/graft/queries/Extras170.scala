@@ -230,7 +230,6 @@ object Extras170 {
     // BIGINT accumulator is exact by the unit-norm bound the spec
     // asserts: Σf² ≈ 1e18 ⇒ Σ(fa−fb)² ≤ 4.0e18 < 2⁶³) with zero
     // shuffle and ~10× less intermediate volume.
-    graft.functions.QuantSqDist.register(s)
     val probe = embeddings(s, d)
       .filter(col("vec_id") < 500)
       .select(col("vec_id").as("a"),

@@ -38,7 +38,6 @@ object Extras202 {
     // all longs (≤ ~9e13), the numerator is even by construction, so
     // the division is exact and dot is bit-identical to the old
     // interpreted zip_with fold
-    graft.functions.QuantSqDist.register(s)
     val pairs = q.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("pid"))
       .select(col("pid"), col("vec_id"),

@@ -142,7 +142,6 @@ object Extras206 {
       .select(col("vec_id").as("pid"), col("qv").as("pv")).limit(128)
     // r14: codegen'd exact integer distance — bit-identical to the
     // interpreted HOF fold it replaces (guide §4)
-    graft.functions.QuantSqDist.register(s)
     val pairs = q.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("pid"))
       .select(col("pid"), col("vec_id"),

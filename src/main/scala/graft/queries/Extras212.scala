@@ -126,7 +126,6 @@ object Extras212 {
     // CdcCutsKernel for the bit-identity argument), so the whole cut
     // discovery now rides the scan with no shuffle at all (guide §1.2
     // per-task work; §2.4 remove shuffles outright).
-    graft.functions.CdcCuts.register(s)
     val chunks = base
       .withColumn("cl", expr(s"${graft.functions.CdcCuts.name}(text)"))
       .select(col("doc_id"), col("text"),

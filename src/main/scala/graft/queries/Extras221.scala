@@ -155,7 +155,6 @@ object Extras221 {
     // r14: codegen'd exact squared distance + exact derived dot
     // Σab = (Σa² + Σb² − Σ(a−b)²)/2 (even numerator, long-exact) —
     // bit-identical to the interpreted zip_with fold (guide §4)
-    graft.functions.QuantSqDist.register(s)
     val pairs = db.crossJoin(broadcast(probes))
       .select(col("pid"), col("vec_id"),
         expr(s"(nv + np - ${graft.functions.QuantSqDist.name}(qv, pv)) div 2").as("dq"))
@@ -273,7 +272,6 @@ object Extras221 {
     // jobs each recomputed the chain before any had materialized it).
     // The shingle-set side keeps the exploded collect_set shape — its
     // est consumers share the aggregate exchange as before.
-    graft.functions.MinHashMd5x16.register(s)
     val sh = documents(s, d)
       .select(col("doc_id"), split(lower(col("text")), " ").as("a"))
       .select(col("doc_id"), explode(expr(

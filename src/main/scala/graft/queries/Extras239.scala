@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** Wave 139 (C960–C963): agreement + two-way nonparametrics + matrix
   * correlation + curation readability — Gwet's AC1 (the prevalence-
@@ -19,15 +20,6 @@ import graft.Tables._
   * mean.
   */
 object Extras239 {
-
-  private def dotD(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.FloatVecDot.register(s)
-    expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
-  }
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(generate_series(1, 64),
-       |    i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)),
-       |    (x, y) -> x + y)""".stripMargin
 
   /** C960 stat_gwets_ac1 — Gwet's AC1 agreement between two binary
     * "raters" on lineitem (returned flag vs high-quantity flag), next
@@ -197,13 +189,13 @@ object Extras239 {
   def statMantelTest(s: SparkSession, d: String): DataFrame = {
     val sample = embeddings(s, d).filter(col("vec_id") < 60)
       .select(col("vec_id"), col("label"), col("embedding"),
-        dotD(s, "embedding", "embedding").as("nrm"))
+        dot("embedding", "embedding").as("nrm"))
     val a = sample.select(col("vec_id").as("va"), col("label").as("la"),
       col("embedding").as("ea"), col("nrm").as("na"))
     val b = sample.select(col("vec_id").as("vb"), col("label").as("lb"),
       col("embedding").as("eb"), col("nrm").as("nb"))
     val pairs = a.join(b, col("va") < col("vb"))
-      .withColumn("dab", dotD(s, "ea", "eb"))
+      .withColumn("dab", dot("ea", "eb"))
       .selectExpr(
         "CAST(floor(sqrt(greatest(na - 2 * dab + nb, 0.0)) * 1e9 + 0.5) AS BIGINT) AS x",
         "CAST(abs(la - lb) AS BIGINT) AS y")
@@ -222,9 +214,9 @@ object Extras239 {
         "abs(r * sqrt((m - 2) / (1 - r * r))) > 1.96 AS significant")
   }
   val statMantelTestSql: String = {
-    val dab = dotSql("a", "b")
-    val naa = dotSql("a", "a")
-    val nbb = dotSql("b", "b")
+    val dab = dotSql("a.embedding", "b.embedding")
+    val naa = dotSql("a.embedding", "a.embedding")
+    val nbb = dotSql("b.embedding", "b.embedding")
     s"""WITH sample AS (
        |  SELECT vec_id, label, embedding FROM embeddings WHERE vec_id < 60),
        |pairs AS (

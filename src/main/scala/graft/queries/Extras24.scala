@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** Twenty-fourth wave: the PERSISTED vector index — the missing piece
   * between C8's per-query IVF (rebuilds cell assignments inside every
@@ -12,19 +13,6 @@ import graft.Tables._
   * the pruning.
   */
 object Extras24 {
-
-  private def dotD(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.FloatVecDot.register(s)
-    expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
-  }
-  /** Bit-identical mirror of [[graft.functions.FloatVecDot]]'s left
-    * fold over two named list columns (not table aliases — usable
-    * inside CTEs).
-    */
-  private def dotSqlCols(a: String, b: String): String =
-    s"""list_reduce(list_transform(generate_series(1, 64),
-       |    i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)),
-       |    (x, y) -> x + y)""".stripMargin
 
   private val indexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val NCells = 16
@@ -49,7 +37,7 @@ object Extras24 {
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
       e.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("embedding"), col("cent_id"),
-          dotD(s, "embedding", "cent_emb").as("cdist"))
+          dot("embedding", "cent_emb").as("cdist"))
         .groupBy("vec_id")
         .agg(
           // int cell id matches the partition-directory type inference
@@ -103,7 +91,7 @@ object Extras24 {
     val wc = Window.partitionBy("probe_id").orderBy(col("cdist").desc, col("cent_id").asc)
     val probeCells = probes.crossJoin(broadcast(cents))
       .select(col("probe_id"), col("probe_emb"), col("cent_id"),
-        dotD(s, "probe_emb", "cent_emb").as("cdist"))
+        dot("probe_emb", "cent_emb").as("cdist"))
       .withColumn("crn", row_number().over(wc))
       .filter(col("crn") <= nprobe)
       .select(col("probe_id"), col("probe_emb"), col("cent_id").cast("int").as("cell"))
@@ -116,7 +104,7 @@ object Extras24 {
       .join(idx.filter(col("cell").isin(touched.map(Integer.valueOf): _*)), "cell")
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
-        round(dotD(s, "probe_emb", "embedding"), 6).as("sim"))
+        round(dot("probe_emb", "embedding"), 6).as("sim"))
       .distinct()
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= 5)
@@ -130,7 +118,7 @@ object Extras24 {
        |  SELECT vec_id, embedding, cell FROM (
        |    SELECT e.vec_id, e.embedding, c.cent_id AS cell,
        |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${dotSqlCols("e.embedding", "c.cent_emb")} DESC,
+       |        ORDER BY ${dotSql("e.embedding", "c.cent_emb")} DESC,
        |                 c.cent_id ASC) AS arn
        |    FROM embeddings e CROSS JOIN cents c)
        |  WHERE arn = 1),
@@ -139,16 +127,16 @@ object Extras24 {
        |    SELECT p.vec_id AS probe_id, p.embedding AS probe_emb,
        |      c.cent_id AS cell,
        |      row_number() OVER (PARTITION BY p.vec_id
-       |        ORDER BY ${dotSqlCols("p.embedding", "c.cent_emb")} DESC,
+       |        ORDER BY ${dotSql("p.embedding", "c.cent_emb")} DESC,
        |                 c.cent_id ASC) AS crn
        |    FROM embeddings p CROSS JOIN cents c WHERE p.vec_id < 10)
        |  WHERE crn <= LEAST($NCells, CAST(ceil(
        |    $NProbe * sqrt((SELECT count(*) FROM embeddings) / 500.0)) AS INT)))
        |SELECT probe_id, vec_id, sim, rn FROM (
        |  SELECT pc.probe_id, a.vec_id,
-       |    round(${dotSqlCols("pc.probe_emb", "a.embedding")}, 6) AS sim,
+       |    round(${dotSql("pc.probe_emb", "a.embedding")}, 6) AS sim,
        |    row_number() OVER (PARTITION BY pc.probe_id
-       |      ORDER BY round(${dotSqlCols("pc.probe_emb", "a.embedding")}, 6) DESC,
+       |      ORDER BY round(${dotSql("pc.probe_emb", "a.embedding")}, 6) DESC,
        |               a.vec_id ASC) AS rn
        |  FROM pcells pc JOIN asg a USING (cell)
        |  WHERE a.vec_id <> pc.probe_id)

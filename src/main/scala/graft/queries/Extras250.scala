@@ -548,7 +548,6 @@ object Extras250 {
     * quantize ·1e12 before the exact sums.
     */
   def embedMmdRbf(s: SparkSession, d: String): DataFrame = {
-    graft.functions.QuantSqDist.register(s)
     val emb = embeddings(s, d).select(col("vec_id").as("id"),
       expr("label % 2 = 0").as("ga"),
       expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1e6 + 0.5) AS BIGINT))").as("qv"))

@@ -112,7 +112,6 @@ object Extras36 {
     // no join-by-dim, no 64×k-wide aggregate. Only the integer-mean
     // re-centering still explodes (it genuinely needs per-dim sums),
     // and it reads the same pinned array frame.
-    graft.functions.QuantSqDist.register(s)
     val qv = embeddings(s, d).select(col("vec_id"),
         expr(
           """transform(embedding,

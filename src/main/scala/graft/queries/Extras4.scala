@@ -266,7 +266,6 @@ object Extras4 {
     * greatest-tie-value rule (largest view id), which the oracle pins.
     */
   def joinAsofForward(s: SparkSession, d: String): DataFrame = {
-    graft.plans.AsofJoinStrategy.register(s)
     val ev = events(s, d)
     // the plan takes pre-resolved expressions, so the negated µs time is
     // materialized as a column on each side first

@@ -157,7 +157,6 @@ object Extras50 {
     * into a string cohort.
     */
   def joinAsofNativeStrkey(s: SparkSession, d: String): DataFrame = {
-    graft.plans.AsofJoinStrategy.register(s)
     val ev = events(s, d).withColumn("cohort",
       concat(lit("u"), lpad((col("user_id") % 10).cast("string"), 2, "0")))
     val p = ev.filter(col("event_type") === "purchase")

@@ -2,25 +2,17 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** Seventh wave of coverage operators: the exact k-NN join, Z-order
   * locality keys, permissive (corrupt-record) CSV ingest, and dynamic
   * partition pruning — each with a DuckDB oracle.
   */
 object Extras7 {
-
-  private def dotD(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.FloatVecDot.register(s)
-    expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
-  }
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(generate_series(1, 64),
-       |    i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)),
-       |    (x, y) -> x + y)""".stripMargin
 
   /** sim_knn_join — the exact k-NN join over a SAMPLED PROBE SET
     * (top-3 for every 25th vector): the ground-truth/recall harness
@@ -46,7 +38,7 @@ object Extras7 {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val corpus = e.select(col("vec_id").as("nid"), col("embedding").as("ne"))
     corpus.crossJoin(broadcast(probes)).filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), dotD(s, "qe", "ne").as("sim"))
+      .select(col("qid"), col("nid"), dot("qe", "ne").as("sim"))
       .groupBy("qid")
       .agg(slice(sort_array(collect_list(struct((-col("sim")).as("ns"), col("nid")))),
         1, 3).as("top"))
@@ -58,7 +50,7 @@ object Extras7 {
   val simKnnJoinSql: String =
     s"""WITH sims AS (
        |  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-       |    ${dotSql("a", "b")} AS sim
+       |    ${dotSql("a.embedding", "b.embedding")} AS sim
        |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
        |  WHERE a.vec_id % 25 = 0),
        |r AS (
@@ -83,7 +75,6 @@ object Extras7 {
     * the write — layout, not computation, is the point.
     */
   def sortZorderKey(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ZOrder2.register(s)
     events(s, d)
       .select(col("event_id"),
         (col("user_id") % 1024).as("xm"),

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.FloatVecDot.{dot, dotSql}
 
 /** LLM-training-data pipeline operators (SURVEY.md §2-B B40–B45):
   * dedup (exact + MinHash-LSH), similarity search, text analysis, and
@@ -20,24 +21,6 @@ import graft.Tables._
   *    never a global sort of all pairs.
   */
 object LlmOps {
-
-  /** Dot product of two L2-normalized float vectors: a strict left
-    * fold over per-element double products, computed by the codegen'd
-    * native expression [[graft.functions.FloatVecDot]]. Product and
-    * fold order are IEEE-pinned, so DuckDB's
-    * list_reduce(list_transform(...)) mirror is bit-identical — no
-    * tolerance needed at compare time (then round(,6) for display).
-    */
-  private def dotD(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.FloatVecDot.register(s)
-    expr(s"${graft.functions.FloatVecDot.name}($a, $b)")
-  }
-
-  /** DuckDB mirror of [[dotD]] — same products, same fold order. */
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(generate_series(1, 64),
-       |    i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)),
-       |    (x, y) -> x + y)""".stripMargin
 
   /** B40 dedup_exact — group documents by content hash. All 500 fixture
     * texts are unique, so the contract output is the per-hash group
@@ -82,8 +65,6 @@ object LlmOps {
     *     (64-bit hashes: set identity ≡ string-shingle identity).
     */
   def dedupMinhashNear(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ShingleHash3.register(s)
-    graft.functions.MinHash16.register(s)
     val docs = documents(s, d)
       .select(col("doc_id"),
         expr(s"${graft.functions.ShingleHash3.name}(text)").as("sh"))
@@ -116,7 +97,7 @@ object LlmOps {
   /** B42 sim_topk_cosine — top-5 cosine neighbors for the 10 probe
     * vectors (vec_id < 10). Vectors are L2-normalized, so cosine = dot.
     * The probe side is broadcast; the corpus streams once; top-k is a
-    * per-probe window. Exact cross-engine equality via [[dotD]].
+    * per-probe window. Exact cross-engine equality via [[graft.functions.FloatVecDot.dot]].
     */
   def simTopkCosine(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
@@ -127,7 +108,7 @@ object LlmOps {
     emb.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
-        round(dotD(s, "probe_emb", "embedding"), 6).as("sim"))
+        round(dot("probe_emb", "embedding"), 6).as("sim"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= 5)
       .orderBy("probe_id", "rn")
@@ -135,9 +116,9 @@ object LlmOps {
   val simTopkCosineSql: String =
     s"""SELECT probe_id, vec_id, sim, rn FROM (
        |  SELECT p.vec_id AS probe_id, e.vec_id AS vec_id,
-       |    round(${dotSql("p", "e")}, 6) AS sim,
+       |    round(${dotSql("p.embedding", "e.embedding")}, 6) AS sim,
        |    row_number() OVER (PARTITION BY p.vec_id
-       |      ORDER BY round(${dotSql("p", "e")}, 6) DESC, e.vec_id ASC) AS rn
+       |      ORDER BY round(${dotSql("p.embedding", "e.embedding")}, 6) DESC, e.vec_id ASC) AS rn
        |  FROM embeddings p JOIN embeddings e ON p.vec_id < 10 AND e.vec_id <> p.vec_id)
        |WHERE rn <= 5
        |ORDER BY probe_id, rn""".stripMargin

@@ -99,9 +99,12 @@ object Streaming {
           val one = s.createDataFrame(java.util.List.of(row), sch).coalesce(1)
           val tmp = Files.createTempDirectory("graft_sent_")
           one.write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet")).findFirst().get()
+          val ls = Files.list(tmp)
+          val part = try ls.filter(p => p.toString.endsWith(".parquet")).findFirst().get()
+            finally ls.close()
           val dst = dir.resolve(f"sentinel-$i.parquet")
           Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
+          deleteTree(tmp)
           stamp(dst)
         }
     }

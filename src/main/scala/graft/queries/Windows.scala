@@ -237,7 +237,6 @@ object Windows {
     * exchanges; the oracle is the window+row_number formulation.
     */
   def joinAsofNative(s: SparkSession, d: String): DataFrame = {
-    graft.plans.AsofJoinStrategy.register(s)
     val ev = events(s, d)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("pid"), col("user_id"), col("ts").as("pts"))

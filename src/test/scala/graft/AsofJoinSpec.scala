@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.plans.{AsofJoin, AsofJoinStrategy}
+import graft.plans.AsofJoin
 
 /** Edge-case semantics of the custom ASOF join operator: exact-time
   * matches, right-time ties, unmatched left keys, empty sides, and
@@ -14,7 +14,7 @@ class AsofJoinSpec extends SparkSpec {
   import spark.implicits._
 
   private def run(l: Seq[(Long, Long, String)], r: Seq[(Long, Long, Long)]) = {
-    AsofJoinStrategy.register(spark)
+    GraftExtensions.register(spark)
     val lf = l.toDF("lk", "lt", "tag")
     val rf = r.toDF("rk", "rt", "rv")
     AsofJoin.df(lf, rf, lf("lk"), rf("rk"), lf("lt"), rf("rt"), rf("rv"))
@@ -62,7 +62,7 @@ class AsofJoinSpec extends SparkSpec {
     // stale-key comparison at the key boundary do real work: with an
     // aliased key, the "same key?" check against the next key's left
     // rows would compare mutated bytes and leak a previous key's match.
-    AsofJoinStrategy.register(spark)
+    GraftExtensions.register(spark)
     val n = 2000
     val l = (0 until n).map(i => (f"key_${i % 97}%04d", (i / 97).toLong * 10 + 5, i.toLong))
     val r = (0 until n).map(i => (f"key_${i % 97}%04d", (i / 97).toLong * 10, i.toLong))

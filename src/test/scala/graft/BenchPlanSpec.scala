@@ -2,42 +2,21 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's chunked-JVM orchestration plan (r14): every registry key
-  * must be timed exactly once, affinity-grouped files (shared memoized
-  * staging) must land in one chunk, and the declared stage-consumer
-  * keys must exist — a renamed query would otherwise silently detach
-  * from its staging and re-mine the corpus inside its timed region.
+/** The bench's run plan: every registry key must be timed exactly
+  * once, the declared stage-consumer keys must exist — a renamed query
+  * would otherwise silently detach from its staging and re-mine the
+  * corpus inside its timed region — and the short summary line must
+  * fit the 2000-char log tail it is parsed from.
   */
 class BenchPlanSpec extends AnyFunSuite {
 
   test("planned units cover the registry exactly once") {
-    val planned = Bench.plannedUnits.flatMap(_._2)
+    val planned = Bench.fullRunOrder
     assert(planned.size == planned.distinct.size,
       "a query is planned twice")
     assert(planned.toSet == SparkEntry.queries.keySet,
       s"plan/registry mismatch: ${(planned.toSet.union(SparkEntry.queries.keySet) --
         planned.toSet.intersect(SparkEntry.queries.keySet)).take(5).mkString(", ")}")
-  }
-
-  test("chunk plan at the default size covers the registry exactly once") {
-    val chunks = Bench.planChunks(128)
-    val all = chunks.flatten
-    assert(all.size == all.distinct.size)
-    assert(all.toSet == SparkEntry.queries.keySet)
-    assert(chunks.forall(_.nonEmpty))
-  }
-
-  test("affinity groups keep co-staged files in one chunk") {
-    val chunks = Bench.planChunks(128)
-    val fileOfKey: Map[String, String] = SparkEntry.namedQueryMaps
-      .flatMap { case (f, m) => m.keys.map(_ -> f) }.toMap
-    Bench.affinityGroups.foreach { group =>
-      val chunkIdxs = chunks.zipWithIndex.flatMap { case (keys, i) =>
-        if (keys.exists(k => group.contains(fileOfKey(k)))) Some(i) else None
-      }
-      assert(chunkIdxs.distinct.size <= 1,
-        s"affinity group $group split across chunks $chunkIdxs")
-    }
   }
 
   test("declared stage-consumer keys exist in the registry") {
@@ -49,29 +28,9 @@ class BenchPlanSpec extends AnyFunSuite {
     }
   }
 
-  test("affinity-group file names exist in the registry slices") {
-    val files = SparkEntry.namedQueryMaps.map(_._1).toSet
-    Bench.affinityGroups.foreach { group =>
-      val missing = group -- files
-      assert(missing.isEmpty,
-        s"affinity group names not in namedQueryMaps: ${missing.mkString(", ")}")
-    }
-  }
-
-  test("stage consumers are co-chunked with their stage (staged once per run)") {
-    val chunks = Bench.planChunks(128)
-    Bench.stageDefs.foreach { case (stage, consumers, _) =>
-      val idxs = chunks.zipWithIndex.collect {
-        case (keys, i) if keys.exists(consumers) => i
-      }
-      assert(idxs.size <= 1,
-        s"stage $stage consumers split across chunks $idxs — it would be staged ${idxs.size}x")
-    }
-  }
-
   /** The summary line `Bench.main` prints, for `times` and `errors`. */
   private def summaryLine(times: Map[String, Double], errors: Seq[String]): (Seq[String], String) = {
-    def line(queries: String) = Bench.summaryLine(99999.999, 999.999, 99, 9, times.size,
+    def line(queries: String) = Bench.summaryLine(99999.999, 999.999, 99, times.size,
       errors, queries, "/data/testdata/sf0.1", "bench_out.json")
     val sample = Bench.summarySample(times, line("{}").length)
     (sample, line(Bench.sampleJson(times, sample)))

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 class CdcCutsSpec extends SparkSpec {
 
   test("bit-identical to the exploded md5-gate formulation") {
-    graft.functions.CdcCuts.register(spark)
+    GraftExtensions.register(spark)
     // deterministic texts spanning: ASCII, repeated content (many
     // gate hits), 2-byte and 3-byte code points around window edges,
     // and exactly-8-char (shorter documents: the next test)
@@ -52,7 +52,7 @@ class CdcCutsSpec extends SparkSpec {
   }
 
   test("documents shorter than the window yield no cuts, as the oracle's generate_series") {
-    graft.functions.CdcCuts.register(spark)
+    GraftExtensions.register(spark)
     // every length below the window, ASCII and multi-byte: 7 code
     // points of "日本語" are 21 bytes, more than a window's 8 — the
     // window counts code points

@@ -101,7 +101,7 @@ class DeterminismSpec extends SparkSpec {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import spark.implicits._
-    graft.functions.ZOrder2.register(spark)
+    GraftExtensions.register(spark)
     // reference deinterleave: even output bits reassemble x, odd bits y
     def deinterleave(z: Long): (Long, Long) = {
       var x = 0L; var y = 0L

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class MinHashMd5x16Spec extends SparkSpec {
 
   test("bit-identical to the exploded md5 minhash formulation") {
-    graft.functions.MinHashMd5x16.register(spark)
+    GraftExtensions.register(spark)
     val texts = Seq(
       "one two", // <3 tokens: dropped / NULL
       "a b c",

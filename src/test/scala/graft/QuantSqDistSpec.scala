@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class QuantSqDistSpec extends SparkSpec {
 
   private def withFn[T](body: => T): T = {
-    graft.functions.QuantSqDist.register(spark)
+    GraftExtensions.register(spark)
     body
   }
 

@@ -101,7 +101,7 @@ class SketchSpec extends SparkSpec {
 
   test("dedup_simhash band join is exact for hamming <= 3 (equals all-pairs)") {
     import org.apache.spark.sql.functions._
-    graft.functions.SimHashSig.register(spark)
+    GraftExtensions.register(spark)
     val sigs = graft.Tables.documents(spark, sf)
       .withColumn("sig", expr(s"${graft.functions.SimHashSig.name}(text)"))
       .select(col("doc_id"), col("sig"))

@@ -8,17 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ~5 s; suites must not each pay it).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local("4")
   val baseDir: String = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
   val sf: String = s"$baseDir/sf0.001"
   /** Larger fixture for recall-at-scale tests; None when absent, so

@@ -46,6 +46,26 @@ class StreamingSpec extends SparkSpec {
     assert(leaked.isEmpty, s"stream_tumbling_count left checkpoints behind: $leaked")
   }
 
+  test("a sentinel stage build leaves no graft_sent_ writer dir behind") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def sentinelDirs(): Set[String] = {
+      val ls = Files.list(tmp)
+      try ls.map(_.getFileName.toString).filter(_.startsWith("graft_sent_"))
+        .toArray.map(_.toString).toSet
+      finally ls.close()
+    }
+    val before = sentinelDirs()
+    val dir = Paths.get(Streaming.stageDir(spark, sf, copies = 1, sentinels = true, cached = false))
+    try {
+      val staged = Files.list(dir)
+      try assert(staged.filter(_.getFileName.toString.startsWith("sentinel-")).count() == 2)
+      finally staged.close()
+      val leaked = sentinelDirs() -- before
+      assert(leaked.isEmpty, s"sentinel build left writer dirs behind: $leaked")
+    } finally Streaming.deleteTree(dir)
+  }
+
   test("checkpoint restart resumes exactly-once: new files only, no re-count") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import java.nio.file.attribute.FileTime
