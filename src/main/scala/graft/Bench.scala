@@ -91,7 +91,7 @@ object Bench {
         aggregate(sequence(lit(0L), lit(63L)), lit(0L), (acc, x) => acc + x))
         .count()
       // parquet write + read-back (commit protocol, footer writer)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_warm_").toString
+      val tmp = queries.Scratch.dir("graft_warm_")
       o.limit(5000).write.mode("overwrite").parquet(s"$tmp/w")
       s.read.parquet(s"$tmp/w").count()
     } catch {
@@ -240,7 +240,7 @@ object Bench {
 
   /** Flagship sample for the short summary line — stable early-contract
     * rows, one per major family. */
-  private val flagships = Seq("agg_hash_groupby", "join_inner_hash",
+  private[graft] val flagships = Seq("agg_hash_groupby", "join_inner_hash",
     "win_rank", "dedup_exact", "sim_topk_cosine", "text_bm25_rank")
 
   /** Rows whose per-query visibility matters for round-over-round
@@ -251,7 +251,7 @@ object Bench {
     * slowest measured rows, all inside the driver's 2000-char log-tail
     * capture window.
     */
-  private val spotlight = Seq(
+  private[graft] val spotlight = Seq(
     "stat_spearman_corr", "dedup_bbit_minhash", "text_chrf",
     "graph_hits_fixed", "stat_chi_square", "dedup_containment",
     "stat_median_ci_exact", "agg_equidepth_histogram", "embed_pca_power",

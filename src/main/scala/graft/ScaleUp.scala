@@ -100,7 +100,7 @@ object ScaleUp {
       * sentinel-only until this matched the testdata layout).
       */
     def write(df: DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_scaleup_$name")
+      val tmp = java.nio.file.Paths.get(queries.Scratch.dir(s"graft_scaleup_$name"))
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val listing = java.nio.file.Files.list(tmp)
       val part =

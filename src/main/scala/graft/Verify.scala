@@ -15,9 +15,11 @@ import java.nio.file.{Files, Paths}
   * SparkContext and external catalog underneath. One known shared-state
   * exception: `exec_reliable_checkpoint` (Extras47) mutates the
   * context-global checkpoint dir via `setCheckpointDir` — benign today
-  * because it is the sole `checkpoint()` user and sets a fresh temp dir
-  * each call; a second checkpoint-using query must coordinate (or take
-  * a lock) before this becomes a race. Results are unchanged
+  * because it is the sole `checkpoint()` user and sets a fresh
+  * `graft_ckptdir_*` dir under the run's scratch root
+  * (`queries.Scratch`, deleted at JVM exit) each call; a second
+  * checkpoint-using query must coordinate (or take a lock) before this
+  * becomes a race. Results are unchanged
   * vs sequential — every row is deterministic by the R1 total-order
   * discipline, and cloned sessions inherit the builder's conf.
   */

@@ -21,8 +21,6 @@ import graft.Tables._
   * GraphHubCapSpec).
   */
 private[graft] object CoPurchaseStage {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** One row per unordered supplier pair (sa < sb):
     * `n_inter` = shared (hub-capped) customers,
@@ -50,8 +48,8 @@ private[graft] object CoPurchaseStage {
     * pairs) so the scan+distinct shuffle runs once per corpus.
     */
   private def ensure(s: SparkSession, d: String): String =
-    cache.computeIfAbsent(d, _ => {
-      val dir = StageTmp.dir("graft_copurchase_")
+    Scratch.once("copurchase_stage", d) {
+      val dir = Scratch.dir("graft_copurchase_")
       val edges0 = lineitem(s, d).select(col("l_suppkey"), col("l_orderkey"))
         .join(orders(s, d).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
@@ -79,5 +77,5 @@ private[graft] object CoPurchaseStage {
           .write.parquet(dir + "/pairs")
       } finally edges0.unpersist()
       dir
-    })
+    }
 }

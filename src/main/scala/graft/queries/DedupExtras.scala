@@ -517,16 +517,14 @@ object DedupExtras {
   */
 private[graft] object ShingleStage {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stageDir(s: SparkSession, d: String): String =
-    cache.computeIfAbsent(d, dir => {
-      val p = StageTmp.dir("graft_shstage_")
-      val sh = DedupExtras.shingles(s, dir)
+    Scratch.once("shingle_stage", d) {
+      val p = Scratch.dir("graft_shstage_")
+      val sh = DedupExtras.shingles(s, d)
       sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh")).write.parquet(s"$p/sizes")
       sh.groupBy("shingle").agg(count(lit(1)).as("df")).write.parquet(s"$p/dfreq")
       p
-    })
+    }
 
   def sizes(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${stageDir(s, d)}/sizes")
@@ -542,14 +540,12 @@ private[graft] object ShingleStage {
   */
 private[graft] object NgramPairStage {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def pairs(s: SparkSession, d: String): DataFrame = {
-    val path = cache.computeIfAbsent(d, dir => {
-      val p = StageTmp.dir("graft_ngpairs_") + "/pairs"
-      DedupExtras.mineNgramJaccard(s, dir).write.parquet(p)
+    val path = Scratch.once("ngram_pairs", d) {
+      val p = Scratch.dir("graft_ngpairs_") + "/pairs"
+      DedupExtras.mineNgramJaccard(s, d).write.parquet(p)
       p
-    })
+    }
     s.read.parquet(path)
   }
 }

@@ -130,9 +130,6 @@ object Extras100 {
 
   // ----- incremental release dedup: two snapshots of one DatasetStore
 
-  private val relStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Release store for [[dedupIncrementalRelease]], staged once per
     * (JVM, sf dir): snapshot v1 = the prior corpus release (docs with
     * doc_id % 10 < 7), snapshot v2 = v1 plus the new batch (the rest).
@@ -141,15 +138,14 @@ object Extras100 {
     * dedup reads.
     */
   private[graft] def releaseStore(s: SparkSession, d: String): graft.sources.DatasetStore = {
-    val path = relStores.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_reldedup_").toString + "/docs"
+    val path = Scratch.once("release_store", d) {
+      val p = Scratch.dir("graft_reldedup_") + "/docs"
       val st = new graft.sources.DatasetStore(s, p, "doc_id")
       val docs = documents(s, d).select(col("doc_id"), col("text"))
       st.init(docs.filter(col("doc_id") % 10 < 7))    // v1: prior release
       st.append(docs.filter(col("doc_id") % 10 >= 7)) // v2: + new batch
       p
-    })
+    }
     new graft.sources.DatasetStore(s, path, "doc_id")
   }
 

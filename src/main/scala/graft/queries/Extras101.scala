@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -261,26 +261,22 @@ object Extras101 {
   * bench charges this to its explicit staging line.
   */
 private[graft] object LpaStage {
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def edges(s: SparkSession, d: String): DataFrame = {
-    val p = edgeCache.computeIfAbsent(d, _ => {
-      val path = StageTmp.dir("graft_lpa_") + "/edges"
+    val p = Scratch.once("lpa_edges", d) {
+      val path = Scratch.dir("graft_lpa_") + "/edges"
       Extras101.computeLpaEdges(s, d).write.parquet(path)
       path
-    })
+    }
     s.read.parquet(p)
   }
 
   def labels(s: SparkSession, d: String): DataFrame = {
-    val p = labelCache.computeIfAbsent(d, _ => {
-      val path = StageTmp.dir("graft_lpa_") + "/labels"
+    val p = Scratch.once("lpa_labels", d) {
+      val path = Scratch.dir("graft_lpa_") + "/labels"
       Extras101.computeLpaLabels(s, d).write.parquet(path)
       path
-    })
+    }
     s.read.parquet(p)
   }
 }

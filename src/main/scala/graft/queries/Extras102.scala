@@ -10,23 +10,20 @@ import graft.Tables._
   */
 object Extras102 {
 
-  private val ivmStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Store for [[storeIncrementalAggRefresh]]: v1 = the prior release
     * (doc_id % 10 < 7) WITH the lang column, v2 = v1 plus the new
     * batch — the same release split as Extras100.releaseStore, but
     * carrying the grouping column the maintained view aggregates by.
     */
   private[graft] def ivmStore(s: SparkSession, d: String): graft.sources.DatasetStore = {
-    val path = ivmStores.computeIfAbsent(d, _ => {
-      val p = StageTmp.dir("graft_ivm_") + "/docs"
+    val path = Scratch.once("ivm_store", d) {
+      val p = Scratch.dir("graft_ivm_") + "/docs"
       val st = new graft.sources.DatasetStore(s, p, "doc_id")
       val docs = documents(s, d).select(col("doc_id"), col("lang"), col("text"))
       st.init(docs.filter(col("doc_id") % 10 < 7))
       st.append(docs.filter(col("doc_id") % 10 >= 7))
       p
-    })
+    }
     new graft.sources.DatasetStore(s, path, "doc_id")
   }
 

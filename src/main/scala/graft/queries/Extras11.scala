@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -74,8 +74,6 @@ object Extras11 {
       |ORDER BY o_totalprice DESC, o_orderkey ASC
       |LIMIT 100""".stripMargin
 
-  private val globDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** scan_glob_recursive — nested-directory ingest: data files spread
     * across an uneven directory tree (the "crawler dropped files
     * wherever" layout), read with `recursiveFileLookup` +
@@ -86,9 +84,8 @@ object Extras11 {
     * concern here — one distributed file index pass, then normal scans.
     */
   def scanGlobRecursive(s: SparkSession, d: String): DataFrame = {
-    val dir = globDirs.computeIfAbsent(d, _ => {
-      val root = Files.createTempDirectory(
-        s"graft_glob_${ProcessHandle.current().pid()}_")
+    val dir = Scratch.once("scan_glob_recursive", d) {
+      val root = Paths.get(Scratch.dir("graft_glob_"))
       val o = orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0).coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("a").toString)
@@ -97,7 +94,7 @@ object Extras11 {
       // decoy: a non-parquet file the glob must skip
       Files.write(root.resolve("a/readme.txt"), "not data".getBytes("UTF-8"))
       root.toString
-    })
+    }
     s.read
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.parquet")

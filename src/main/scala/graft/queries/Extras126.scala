@@ -112,8 +112,6 @@ object Extras126 {
       |SELECT indeg, count(*) AS n_nodes
       |FROM indeg GROUP BY indeg ORDER BY indeg""".stripMargin
 
-  private val mcsvDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** C511 scan_csv_multichar_delim — multi-character CSV delimiters
     * ("||", the de-facto pipe-pipe convention of mainframe exports):
     * Spark's CSV reader accepts a multi-char `sep` since 3.0; the
@@ -122,8 +120,8 @@ object Extras126 {
     * equivalent rows relationally from the source table.
     */
   def scanCsvMulticharDelim(s: SparkSession, d: String): DataFrame = {
-    val dir = mcsvDirs.computeIfAbsent(d, _ => {
-      val out = StageTmp.dir(s"graft_mcsv_${ProcessHandle.current().pid()}_")
+    val dir = Scratch.once("scan_csv_multichar_delim", d) {
+      val out = Scratch.dir("graft_mcsv_")
       val rows = documents(s, d).filter(col("doc_id") % 7 === 0)
         .select(col("doc_id"), col("lang"), substring(col("text"), 1, 10).as("frag"))
         .collect().sortBy(_.getLong(0))
@@ -135,7 +133,7 @@ object Extras126 {
       }
       Files.writeString(Paths.get(out, "multi.csv"), sb.toString)
       out
-    })
+    }
     s.read
       .option("header", "true")
       .option("sep", "||")

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,7 +21,7 @@ object Extras127 {
     * recomputes every bucket from the source table arithmetic.
     */
   def storeBranchDiff(s: SparkSession, d: String): DataFrame = {
-    val dir = StageTmp.dir("graft_brdiff_")
+    val dir = Scratch.dir("graft_brdiff_")
     val store = new graft.sources.DatasetStore(s, dir, "o_orderkey")
     val base = orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     store.init(base.filter(col("o_orderkey") % 3 === 0))          // v1
@@ -61,8 +59,6 @@ object Extras127 {
       |  CAST(count(*) FILTER (WHERE o_orderkey % 3 = 0) AS BIGINT) AS n_same
       |FROM orders""".stripMargin
 
-  private val decDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** C515 scan_parquet_decimal_logical — the DECIMAL parquet logical
     * type, end to end: prices are staged as DECIMAL(14,2) (not the
     * source's doubles), read back, and aggregated IN decimal — scale
@@ -72,15 +68,15 @@ object Extras127 {
     * aggregate from the source table.
     */
   def scanParquetDecimalLogical(s: SparkSession, d: String): DataFrame = {
-    val dir = decDirs.computeIfAbsent(d, _ => {
-      val out = StageTmp.dir(s"graft_decpq_${ProcessHandle.current().pid()}_")
+    val dir = Scratch.once("scan_parquet_decimal_logical", d) {
+      val out = Scratch.dir("graft_decpq_")
       orders(s, d)
         .select(col("o_orderkey"),
           expr("CAST(o_totalprice AS DECIMAL(14,2))").as("price_dec"),
           col("o_orderpriority"))
         .write.mode("overwrite").parquet(s"$out/dec.parquet")
       out
-    })
+    }
     val back = s.read.parquet(s"$dir/dec.parquet")
     back.groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"),

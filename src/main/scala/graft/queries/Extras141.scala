@@ -20,7 +20,7 @@ object Extras141 {
     * so every bucket recomputes from source arithmetic in the oracle.
     */
   def storeMergeBranches(s: SparkSession, d: String): DataFrame = {
-    val dir = StageTmp.dir("graft_brmerge_")
+    val dir = Scratch.dir("graft_brmerge_")
     val store = new graft.sources.DatasetStore(s, dir, "o_orderkey")
     val base = orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     def bumped(m: Long, cents: Int) = base.filter(col("o_orderkey") % 4 === m)

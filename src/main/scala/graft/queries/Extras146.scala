@@ -132,8 +132,6 @@ object Extras146 {
       |    THEN 'drift_5pct' ELSE 'no_drift' END AS verdict
       |FROM cnts""".stripMargin
 
-  private val nestedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** C590 scan_nested_filter_pushdown — predicate pushdown INTO a
     * nested struct: orders staged as parquet with a
     * meta(priority, status) struct column, read back and filtered on
@@ -143,15 +141,15 @@ object Extras146 {
     * rule out). Aggregate proves the filtered content.
     */
   def scanNestedFilterPushdown(s: SparkSession, d: String): DataFrame = {
-    val dir = nestedDirs.computeIfAbsent(d, _ => {
-      val out = StageTmp.dir(s"graft_nestpq_${ProcessHandle.current().pid()}_")
+    val dir = Scratch.once("scan_nested_filter_pushdown", d) {
+      val out = Scratch.dir("graft_nestpq_")
       orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"),
           struct(col("o_orderpriority").as("priority"),
             col("o_orderstatus").as("status")).as("meta"))
         .write.mode("overwrite").parquet(s"$out/nested.parquet")
       out
-    })
+    }
     s.read.parquet(s"$dir/nested.parquet")
       .filter(col("meta.priority") === "1-URGENT")
       .groupBy(col("meta.status").as("status"))

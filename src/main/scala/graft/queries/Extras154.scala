@@ -179,7 +179,6 @@ object Extras154 {
     val box = comp.groupBy("pos")
       .agg(min(col("f")).as("lo"), max(col("f")).as("hi"))
     val ss = embeddings(s, d).sparkSession
-    import ss.implicits._
     val probes = ss.range(m).toDF("p")
     val synth = probes
       .crossJoin(broadcast(box))

@@ -10,9 +10,6 @@ import graft.sources.DatasetStore
   */
 object Extras16 {
 
-  private val compactState =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int, Int)]()
-
   /** store_compact — table maintenance for the keyed store (A2): three
     * appends leave three small segments (the streaming/CDC small-files
     * problem); COMPACT rewrites them into one immutable segment under
@@ -24,9 +21,8 @@ object Extras16 {
     * source — equality proves compaction moved every byte.
     */
   def storeCompact(s: SparkSession, d: String): DataFrame = {
-    val (dir, before, after) = compactState.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files.createTempDirectory(
-        s"graft_compact_${ProcessHandle.current().pid()}_").toString
+    val (dir, before, after) = Scratch.once("store_compact", d) {
+      val p = Scratch.dir("graft_compact_")
       val st = new DatasetStore(s, p, "o_orderkey")
       val o = orders(s, d)
       st.init(o.filter(col("o_orderkey") % 3 === 0))
@@ -35,7 +31,7 @@ object Extras16 {
       val b = st.segmentCount
       st.compact()
       (p, b, st.segmentCount)
-    })
+    }
     val st = new DatasetStore(s, dir, "o_orderkey")
     st.read()
       .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("revenue"))

@@ -32,7 +32,6 @@ object Extras170 {
     val tot = rets.agg(count(lit(1)).cast("long").as("m"))
     val split = rets.crossJoin(broadcast(tot))
       .withColumn("half", expr("CASE WHEN rn * 2 <= m THEN 1 ELSE 2 END"))
-    val wq = Window.partitionBy(lit(1)).orderBy(col("rq").asc, col("rn").asc)
     val thr = split.filter(col("half") === 1)
       .withColumn("qr", row_number().over(
         Window.orderBy(col("rq").asc, col("rn").asc)).cast("long"))

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -12,8 +10,6 @@ import graft.Tables._
   * functions — each with a DuckDB oracle.
   */
 object Extras18 {
-
-  private val sinkDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** stream_sink_parquet — the PRODUCTION streaming sink (every other
     * streaming exhibit uses the memory sink for harness reasons): a
@@ -26,11 +22,10 @@ object Extras18 {
     * sink dropped nothing and duplicated nothing.
     */
   def streamSinkParquet(s: SparkSession, d: String): DataFrame = {
-    val out = sinkDirs.computeIfAbsent(d, _ => {
+    val out = Scratch.once("stream_sink_parquet", d) {
       val sch = Streaming.rawSchema(s, d)
       val dir = Streaming.stageDir(s, d, copies = 1, sentinels = false)
-      val outDir = Files.createTempDirectory(
-        s"graft_fsink_${ProcessHandle.current().pid()}_").toString
+      val outDir = Scratch.dir("graft_fsink_")
       val w = Streaming.eventStream(s, dir, sch)
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("value"))
@@ -40,7 +35,7 @@ object Extras18 {
         .trigger(Trigger.AvailableNow())
       Streaming.runToEnd(s, w)
       outDir
-    })
+    }
     s.read.parquet(out)
       .agg(count(lit(1)).as("n"),
         countDistinct(col("event_id")).as("n_distinct"),

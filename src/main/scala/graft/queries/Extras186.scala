@@ -159,8 +159,6 @@ object Extras186 {
           |  + 0.841621 * sqrt(p1 * (1 - p1) + p2 * (1 - p2)), 2)
           |/ (delta * delta), 2) AS n_per_arm""".stripMargin)
   }
-  // the window rank lives in a subobject-free selectExpr: add rn first
-  private def statPowerTwoPropImpl(s: SparkSession, d: String): DataFrame = statPowerTwoProp(s, d)
   val statPowerTwoPropSql: String =
     """WITH src AS (
       |  SELECT source, CAST(count(*) AS BIGINT) AS n,

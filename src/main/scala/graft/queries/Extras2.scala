@@ -100,7 +100,7 @@ object Extras2 {
     * schema inference means reading everything twice), aggregated.
     */
   def scanJsonSource(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_json_").toString
+    val tmp = Scratch.dir("graft_json_")
     val slice = events(s, d)
       .filter(col("event_id") % 50 === 0)
       .select("event_id", "event_type", "value")

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -10,8 +8,6 @@ import graft.Tables._
   * oracle.
   */
 object Extras22 {
-
-  private val dpoDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** scan_partition_overwrite — DYNAMIC partition overwrite (the
     * incremental-reload write contract): with
@@ -26,9 +22,8 @@ object Extras22 {
     * restored after.
     */
   def scanPartitionOverwrite(s: SparkSession, d: String): DataFrame = {
-    val dir = dpoDirs.computeIfAbsent(d, _ => {
-      val out = Files.createTempDirectory(
-        s"graft_dpo_${ProcessHandle.current().pid()}_").toString
+    val dir = Scratch.once("scan_partition_overwrite", d) {
+      val out = Scratch.dir("graft_dpo_")
       val ev = events(s, d).select(col("event_id"), col("event_type"), col("value"))
       ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
       val key = "spark.sql.sources.partitionOverwriteMode"
@@ -42,7 +37,7 @@ object Extras22 {
         prev match { case Some(p) => s.conf.set(key, p); case None => s.conf.unset(key) }
       }
       out
-    })
+    }
     s.read.parquet(dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))

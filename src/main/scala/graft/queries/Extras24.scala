@@ -14,7 +14,6 @@ import graft.functions.FloatVecDot.{dot, dotSql}
   */
 object Extras24 {
 
-  private val indexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val NCells = 16
   private val NProbe = 6
 
@@ -29,9 +28,8 @@ object Extras24 {
     * directories without touching the rest.
     */
   private def buildIndex(s: SparkSession, d: String): String =
-    indexDirs.computeIfAbsent(d, _ => {
-      val path = java.nio.file.Files.createTempDirectory(
-        s"graft_ivfidx_${ProcessHandle.current().pid()}_").toString + "/ivf"
+    Scratch.once("ivf_index", d) {
+      val path = Scratch.dir("graft_ivfidx_") + "/ivf"
       val e = embeddings(s, d)
       val cents = e.filter(col("vec_id") < NCells)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
@@ -46,7 +44,7 @@ object Extras24 {
           first(col("embedding")).as("embedding"))
         .write.partitionBy("cell").parquet(path)
       path
-    })
+    }
 
   /** sim_index_probe — probe the PERSISTED IVF index (SURVEY C151,
     * VERDICT r3 "What's missing" #2): the query-side half of the ANN
@@ -143,8 +141,6 @@ object Extras24 {
        |WHERE rn <= 5
        |ORDER BY probe_id, rn""".stripMargin
 
-  private val bpeMerges =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
   private val BpeNMerges = 40
 
   /** text_bpe_tokenize — subword tokenization over the corpus (SURVEY
@@ -173,7 +169,7 @@ object Extras24 {
   }
 
   private def trainedMerges(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeMerges.computeIfAbsent(d, _ => {
+    Scratch.once("bpe_merges", d) {
       val wc = documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
@@ -181,7 +177,7 @@ object Extras24 {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
         .sortBy(_._1) // input order independence for the trainer
       graft.functions.BpeTokenizer.train(wc, BpeNMerges)
-    })
+    }
 
   def textBpeTokenize(s: SparkSession, d: String): DataFrame = {
     val merges = trainedMerges(s, d)
@@ -204,7 +200,7 @@ object Extras24 {
     * staging only; the graded operator is the parse + pivot-back.
     */
   private[queries] def stageHeteroSbDir(s: SparkSession, d: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hsb_")
+    val dir = java.nio.file.Paths.get(Scratch.dir("graft_hsb_"))
     val docs = documents(s, d)
       .select(col("lang"), col("doc_id"), col("n_chars"),
         size(filter(split(col("text"), " "), w => length(w) > 0))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,10 +15,6 @@ import graft.Tables._
   */
 object Extras25 {
 
-  private val mediaDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val xmlDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val jsonDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** scan_binaryfile_media — the `binaryFile` data source over a
     * directory of REAL media files (every 10th document packed into a
     * genuine PNG or WAV by [[graft.sources.MediaCodec]], doc id in the
@@ -31,9 +27,8 @@ object Extras25 {
     */
   def scanBinaryfileMedia(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = mediaDirs.computeIfAbsent(d, _ => {
-      val out = Files.createTempDirectory(
-        s"graft_media_${ProcessHandle.current().pid()}_").toString
+    val dir = Scratch.once("scan_binaryfile_media", d) {
+      val out = Scratch.dir("graft_media_")
       // staged DISTRIBUTED: each task encodes and writes its own docs'
       // media files into the shared temp dir — the refZipExport
       // local-FS staging pattern, no driver collect
@@ -49,7 +44,7 @@ object Extras25 {
           }
         }
       out
-    })
+    }
     s.read.format("binaryFile").load(dir)
       .select(
         regexp_extract(col("path"), "media_(\\d+)\\.", 1).cast("long").as("doc_id"),
@@ -85,9 +80,8 @@ object Extras25 {
     * R2 discipline every other money path uses.
     */
   def scanXmlSource(s: SparkSession, d: String): DataFrame = {
-    val dir = xmlDirs.computeIfAbsent(d, _ => {
-      val out = Files.createTempDirectory(
-        s"graft_xml_${ProcessHandle.current().pid()}_")
+    val dir = Scratch.once("scan_xml_source", d) {
+      val out = Paths.get(Scratch.dir("graft_xml_"))
       val rows = orders(s, d).filter(col("o_orderkey") % 100 === 0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .collect().sortBy(_.getLong(0))
@@ -102,7 +96,7 @@ object Extras25 {
       sb ++= "</orders>\n"
       Files.writeString(out.resolve("orders.xml"), sb.toString)
       out.toString
-    })
+    }
     val sch = StructType(Seq(
       StructField("orderkey", LongType),
       StructField("status", StringType),
@@ -132,9 +126,8 @@ object Extras25 {
     * the mode contract is the operator.
     */
   def scanJsonModes(s: SparkSession, d: String): DataFrame = {
-    val dir = jsonDirs.computeIfAbsent(d, _ => {
-      val out = Files.createTempDirectory(
-        s"graft_jsonm_${ProcessHandle.current().pid()}_")
+    val dir = Scratch.once("scan_json_modes", d) {
+      val out = Paths.get(Scratch.dir("graft_jsonm_"))
       val rows = documents(s, d).select("doc_id", "n_chars")
         .collect().sortBy(_.getLong(0))
       val sb = new StringBuilder
@@ -145,7 +138,7 @@ object Extras25 {
       }
       Files.writeString(out.resolve("docs.jsonl"), sb.toString)
       out.toString
-    })
+    }
     val sch = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_chars", LongType),

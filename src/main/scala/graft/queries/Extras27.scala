@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,8 +11,6 @@ import graft.Tables._
   * store schema evolution, and product quantization for embeddings.
   */
 object Extras27 {
-
-  private val csvDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** join_skew_aqe — ADAPTIVE skew-join splitting: a planted 80%-hot
     * key would pin one reducer for the whole stage wall-clock; with
@@ -90,9 +88,8 @@ object Extras27 {
     * round-trips bytes exactly.
     */
   def scanCsvQuoted(s: SparkSession, d: String): DataFrame = {
-    val dir = csvDirs.computeIfAbsent(d, _ => {
-      val out = Files.createTempDirectory(
-        s"graft_csvq_${ProcessHandle.current().pid()}_")
+    val dir = Scratch.once("scan_csv_quoted", d) {
+      val out = Paths.get(Scratch.dir("graft_csvq_"))
       val rows = documents(s, d).filter(col("doc_id") % 5 === 0)
         .select(col("doc_id"), substring(col("text"), 1, 12).as("frag"))
         .collect().sortBy(_.getLong(0))
@@ -105,7 +102,7 @@ object Extras27 {
       }
       Files.writeString(out.resolve("quoted.csv"), sb.toString)
       out.toString
-    })
+    }
     s.read
       .option("header", "true")
       .option("multiLine", "true")
@@ -131,7 +128,7 @@ object Extras27 {
     */
   def storeSchemaEvolution(s: SparkSession, d: String): DataFrame = {
     val store = new graft.sources.DatasetStore(
-      s, Files.createTempDirectory("graft_sev_").toString + "/t", "o_orderkey")
+      s, Scratch.dir("graft_sev_") + "/t", "o_orderkey")
     val o = orders(s, d)
     store.init(o.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_totalprice")))

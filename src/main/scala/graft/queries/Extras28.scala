@@ -142,8 +142,6 @@ object Extras28 {
       |  GROUP BY 1)
       |ORDER BY user_id""".stripMargin
 
-  private val incResults = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
   /** stream_incremental_resume — CHECKPOINTED incremental processing,
     * the production Trigger.AvailableNow contract: run 1 processes the
     * staged file and commits its offsets; a second file lands; run 2
@@ -155,8 +153,8 @@ object Extras28 {
     * checkpointed stream from a batch rescan.
     */
   def streamIncrementalResume(s: SparkSession, d: String): DataFrame = {
-    val (n1, n2) = incResults.computeIfAbsent(d, _ => {
-      val src = Files.createTempDirectory("graft_incr_src_")
+    val (n1, n2) = Scratch.once("stream_incremental_resume", d) {
+      val src = Paths.get(Scratch.dir("graft_incr_src_"))
       val sch = s.read.parquet(s"$d/orders.parquet").schema
       val totals = new java.util.concurrent.atomic.AtomicLong()
       def runOnce(ckpt: String): Long = {
@@ -180,7 +178,7 @@ object Extras28 {
         val b = runOnce(ckpt)
         (a, b)
       }
-    })
+    }
     orders(s, d)
       .agg(count(lit(1)).as("n_file_rows"))
       .select(

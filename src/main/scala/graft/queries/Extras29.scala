@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,8 +33,6 @@ object Extras29 {
       |FROM region CROSS JOIN nation
       |ORDER BY r_name, n_name""".stripMargin
 
-  private val gzDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** scan_csv_compressed — gzip-compressed CSV ingest: the codec is
     * inferred from the `.csv.gz` extension and decompression streams
     * inside the scan task. The scale note a 100 TB ingest must know:
@@ -43,10 +41,9 @@ object Extras29 {
     * files), giving back parallelism at the file level.
     */
   def scanCsvCompressed(s: SparkSession, d: String): DataFrame = {
-    val dir = gzDirs.computeIfAbsent(d, _ => {
+    val dir = Scratch.once("scan_csv_compressed", d) {
       import s.implicits._
-      val out = Files.createTempDirectory(
-        s"graft_csvgz_${ProcessHandle.current().pid()}_").toString
+      val out = Scratch.dir("graft_csvgz_")
       // staged DISTRIBUTED: repartition by priority, each task gzips
       // the priorities that hashed to it into the shared temp dir —
       // the refZipExport local-FS staging pattern, no driver collect
@@ -71,7 +68,7 @@ object Extras29 {
           Iterator(byPrio.size)
         }.collect() // sink commit: priorities-per-task counts, not data
       out
-    })
+    }
     s.read
       .option("header", "true")
       .schema(StructType(Seq(
@@ -155,9 +152,6 @@ object Extras29 {
       |FROM orders WHERE o_orderkey % 500 = 0
       |ORDER BY o_orderkey""".stripMargin
 
-  private val progressResults =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
   /** stream_progress_metrics — the streaming OBSERVABILITY surface:
     * every micro-batch reports a StreamingQueryProgress (rows read,
     * batch id, state rows); monitoring at scale is built on these, not
@@ -167,8 +161,8 @@ object Extras29 {
     * matches the file count.
     */
   def streamProgressMetrics(s: SparkSession, d: String): DataFrame = {
-    val (totalIn, nBatches) = progressResults.computeIfAbsent(d, _ => {
-      val src = Files.createTempDirectory("graft_prog_src_")
+    val (totalIn, nBatches) = Scratch.once("stream_progress_metrics", d) {
+      val src = Paths.get(Scratch.dir("graft_prog_src_"))
       val sch = s.read.parquet(s"$d/orders.parquet").schema
       // three files → three per-file micro-batches (maxFilesPerTrigger=1)
       (0 until 3).foreach { i =>
@@ -185,7 +179,7 @@ object Extras29 {
         .trigger(Trigger.AvailableNow())
       val progress = Streaming.runToEnd(s, w).recentProgress.filter(_.numInputRows > 0)
       (progress.map(_.numInputRows).sum, progress.length.toLong)
-    })
+    }
     orders(s, d).agg(count(lit(1)).as("n_file_rows"))
       .select(lit(totalIn).as("total_input_rows"),
         lit(nBatches).as("n_data_batches"), col("n_file_rows"))

@@ -344,7 +344,7 @@ object Extras3 {
     * line.
     */
   def scanTextSource(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_txt_").toString + "/docs"
+    val tmp = Scratch.dir("graft_txt_") + "/docs"
     documents(s, d)
       .select(concat(col("doc_id").cast("string"), lit("\t"), col("text")).as("value"))
       .write.mode("overwrite").text(tmp)
@@ -401,7 +401,7 @@ object Extras3 {
     * is copied to keep history).
     */
   def storeTimeTravel(s: SparkSession, d: String): DataFrame = {
-    val path = java.nio.file.Files.createTempDirectory("graft_tt_").toString + "/orders"
+    val path = Scratch.dir("graft_tt_") + "/orders"
     val store = new graft.sources.DatasetStore(s, path, "o_orderkey")
     // store only the columns the dimension needs — the store
     // materializes its input, so projection must happen before init
@@ -672,7 +672,7 @@ object Extras3 {
     * schema in a metastore instead, which is why it's off by default.
     */
   def scanMergeSchema(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evo_").toString + "/cust"
+    val tmp = Scratch.dir("graft_evo_") + "/cust"
     val c = customer(s, d)
     c.select("c_custkey", "c_name")
       .write.mode("overwrite").parquet(s"$tmp/batch=1")

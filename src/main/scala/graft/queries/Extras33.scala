@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,7 +25,7 @@ object Extras33 {
     * unfiltered base-table scan (oracle reads the original).
     */
   def scanParquetBloom(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_bloom_").toString
+    val dir = Scratch.dir("graft_bloom_")
     lineitem(s, d).write.mode("overwrite")
       .option("parquet.bloom.filter.enabled#l_partkey", "true")
       .option("parquet.bloom.filter.expected.ndv#l_partkey", "20000")
@@ -58,7 +56,7 @@ object Extras33 {
     * time-range-heavy consumers.
     */
   def sortClusterMinmax(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_clust_").toString
+    val dir = Scratch.dir("graft_clust_")
     lineitem(s, d)
       .repartitionByRange(8, col("l_shipdate"))
       .sortWithinPartitions("l_shipdate")

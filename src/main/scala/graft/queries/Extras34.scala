@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -209,7 +207,7 @@ object Extras34 {
     * store (A2) could not express.
     */
   def storeConcurrentCas(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_cas_").toString
+    val dir = Scratch.dir("graft_cas_")
     val store = new graft.sources.DatasetStore(s, dir, "o_orderkey")
     val base = orders(s, d)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))

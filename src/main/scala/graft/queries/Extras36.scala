@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -16,7 +14,7 @@ object Extras36 {
     * ReadSchema prunes to the one leaf the query touches.
     */
   private[graft] def nestedReadBack(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_nested_").toString
+    val dir = Scratch.dir("graft_nested_")
     customer(s, d).select(col("c_custkey"),
         struct(col("c_name"), col("c_acctbal"),
           struct(col("c_mktsegment"), col("c_nationkey")).as("seg")).as("profile"))
@@ -240,7 +238,7 @@ object Extras36 {
     * fast-forward).
     */
   def storeBranching(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_branch_").toString
+    val dir = Scratch.dir("graft_branch_")
     val store = new graft.sources.DatasetStore(s, dir, "o_orderkey")
     val base = orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     store.init(base.filter(col("o_orderkey") % 3 === 0))          // v1

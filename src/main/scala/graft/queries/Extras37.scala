@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
@@ -86,7 +84,7 @@ object Extras37 {
     * census matches the base table's date arithmetic.
     */
   def scanPartitionTypeInference(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_ptype_").toString
+    val dir = Scratch.dir("graft_ptype_")
     orders(s, d)
       .withColumn("o_year", year(col("o_orderdate")))
       .withColumn("o_month", month(col("o_orderdate")))

@@ -164,7 +164,7 @@ object Extras38 {
     * file level (a 10 GB wholetext file is a straggler by design).
     */
   def scanWholetext(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_whole_").toString
+    val dir = Scratch.dir("graft_whole_")
     val docs = documents(s, d).filter(col("doc_id").isin(1L, 2L, 3L))
       .select(col("doc_id"), col("text")).collect()
     docs.foreach(r => Files.write(Paths.get(dir, s"doc_${r.getLong(0)}.txt"),

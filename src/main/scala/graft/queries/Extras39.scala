@@ -21,7 +21,7 @@ object Extras39 {
     */
   def scanJsonMultiline(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_mljson_").toString
+    val dir = Scratch.dir("graft_mljson_")
     // staged DISTRIBUTED (multiLine JSON reads each file as one array,
     // so one array file per task composes): executors write into the
     // shared temp dir — the refZipExport local-FS staging pattern, no
@@ -127,7 +127,7 @@ object Extras39 {
     * replays relationally.
     */
   def storeChangeFeed(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_cdf_").toString
+    val dir = Scratch.dir("graft_cdf_")
     val store = new graft.sources.DatasetStore(s, dir, "o_orderkey")
     val base = orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     store.init(base.filter(col("o_orderkey") % 4 === 0))                  // v1

@@ -294,8 +294,6 @@ object Extras4 {
       |WHERE rn = 1
       |ORDER BY pid""".stripMargin
 
-  private val orcDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** scan_orc_source — ORC source/sink round trip (fifth format beside
     * parquet/CSV/JSON/text): a filtered lineitem slice is written as
     * ORC once per (JVM, sfDir), read back, and aggregated. ORC carries
@@ -306,13 +304,12 @@ object Extras4 {
     * round trip is lossless.
     */
   def scanOrcSource(s: SparkSession, d: String): DataFrame = {
-    val dir = orcDirs.computeIfAbsent(d, _ => {
-      val out = java.nio.file.Files.createTempDirectory(
-        s"graft_orc_${ProcessHandle.current().pid()}_").toString
+    val dir = Scratch.once("scan_orc_source", d) {
+      val out = Scratch.dir("graft_orc_")
       lineitem(s, d).filter(col("l_quantity") >= 45)
         .write.mode("overwrite").orc(out)
       out
-    })
+    }
     s.read.orc(dir)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("revenue"))

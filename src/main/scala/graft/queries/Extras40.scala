@@ -21,7 +21,7 @@ object Extras40 {
     */
   def scanCsvOptions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_csvopt_").toString
+    val dir = Scratch.dir("graft_csvopt_")
     // staged DISTRIBUTED: one CSV per task (header:true handles a
     // header per file), executors write into the shared temp dir — the
     // refZipExport local-FS staging pattern, no driver collect. The

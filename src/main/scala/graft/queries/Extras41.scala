@@ -37,7 +37,7 @@ object Extras41 {
     * The flag is session-scoped conf, restored after.
     */
   def scanIgnoreCorruptFiles(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_corrupt_").toString
+    val dir = Scratch.dir("graft_corrupt_")
     val base = orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     base.filter(col("o_orderkey") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/a")
@@ -48,7 +48,7 @@ object Extras41 {
         .map(_.asInstanceOf[java.nio.file.Path])
         .filter(_.toString.endsWith(".parquet"))
     }
-    val flat = Files.createTempDirectory("graft_corrupt_flat_").toString
+    val flat = Scratch.dir("graft_corrupt_flat_")
     files.zipWithIndex.foreach { case (p, i) =>
       Files.copy(p, Paths.get(flat, s"part-$i.parquet"))
     }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -57,7 +55,7 @@ object Extras43 {
     * stays parallel.
     */
   def sinkJsonRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_jsink_").toString
+    val dir = Scratch.dir("graft_jsink_")
     orders(s, d).filter(col("o_orderkey") % 8 === 0)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       .write.mode("overwrite").json(dir)

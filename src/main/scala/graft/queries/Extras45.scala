@@ -23,13 +23,13 @@ object Extras45 {
     * files.
     */
   def scanModifiedAfter(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_mtime_").toString
+    val dir = Scratch.dir("graft_mtime_")
     val base = orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     base.filter(col("o_orderkey") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/old")
     base.filter(col("o_orderkey") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/new")
-    val flat = Files.createTempDirectory("graft_mtime_flat_").toString
+    val flat = Scratch.dir("graft_mtime_flat_")
     def move(sub: String, name: String, mtime: Long): Unit = {
       val part = Files.list(Paths.get(dir, sub)).toArray.toSeq
         .map(_.asInstanceOf[java.nio.file.Path])
@@ -130,7 +130,7 @@ object Extras45 {
     * which is the point of the exhibit).
     */
   def scanCsvEncoding(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_enc_").toString
+    val dir = Scratch.dir("graft_enc_")
     val rows = Seq("1;café", "2;naïve", "3;über")
     Files.write(Paths.get(dir, "latin1.csv"),
       ("id;word\n" + rows.mkString("\n")).getBytes("ISO-8859-1"))

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -101,7 +99,7 @@ object Extras47 {
     * manifest copy, zero data movement ([[graft.sources.DatasetStore.rollback]]).
     */
   def storeRollback(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_rb_").toString
+    val dir = Scratch.dir("graft_rb_")
     val store = new graft.sources.DatasetStore(s, dir, "o_orderkey")
     val base = orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     store.init(base.filter(col("o_orderkey") % 3 === 0))      // v1
@@ -127,7 +125,7 @@ object Extras47 {
     * its parquet-backed RDD replaces the whole upstream lineage.
     */
   def execReliableCheckpoint(s: SparkSession, d: String): DataFrame = {
-    val ckpt = Files.createTempDirectory("graft_ckptdir_").toString
+    val ckpt = Scratch.dir("graft_ckptdir_")
     s.sparkContext.setCheckpointDir(ckpt)
     val agg = orders(s, d).groupBy("o_custkey")
       .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("spend"))

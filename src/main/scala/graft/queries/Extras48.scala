@@ -85,7 +85,7 @@ object Extras48 {
     */
   def scanTextLinesep(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_lsep_").toString
+    val dir = Scratch.dir("graft_lsep_")
     // staged DISTRIBUTED: one sentinel-joined file per task (record
     // counts compose across files), executors write into the shared
     // temp dir — the refZipExport local-FS staging pattern, no driver

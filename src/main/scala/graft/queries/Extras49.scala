@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -141,7 +139,7 @@ object Extras49 {
     * on.
     */
   def sinkCsvQuotedRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_csvq_").toString
+    val dir = Scratch.dir("graft_csvq_")
     val nasty = orders(s, d).filter(col("o_orderkey") % 100 === 0)
       .select(col("o_orderkey"),
         concat(lit("v,\""), col("o_orderstatus"), lit("\"\nline2-"),

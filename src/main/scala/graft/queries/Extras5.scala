@@ -177,8 +177,6 @@ object Extras5 {
       |WHERE event_type = 'purchase' AND t1 = 'view' AND t2 = 'view'
       |GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  private val lateDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** stream_late_drop — the watermark's DISCARD contract, exhibited
     * deterministically: the replay delivers all events from Jan 15 on
     * as batch 1, then the first half of the month as batch 2 — by then
@@ -197,13 +195,13 @@ object Extras5 {
     val maxNs = Streaming.maxTsNanos(s, d)
     val splitNs = java.time.LocalDate.of(2024, 1, 15)
       .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.getEpochSecond * 1000000000L
-    val dir = lateDirs.computeIfAbsent(d, _ => {
-      val out = Files.createTempDirectory("graft_late_")
+    val dir = Scratch.once("stream_late_drop", d) {
+      val out = Paths.get(Scratch.dir("graft_late_"))
       val raw = s.read.schema(sch).parquet(s"$d/events.parquet")
       val t0 = System.currentTimeMillis() - 120000
       var seq = 0
       def writeOne(df: DataFrame, name: String): Unit = {
-        val tmp = Files.createTempDirectory("graft_late_part_")
+        val tmp = Paths.get(Scratch.dir("graft_late_part_"))
         df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
           .findFirst().get()
@@ -224,7 +222,7 @@ object Extras5 {
       }
       writeOne(raw.filter(col("ts") < splitTs), "zz-late.parquet")
       out.toString
-    })
+    }
     val agg = Streaming.eventStream(s, dir, sch, maxFilesPerTrigger = Some(1))
       .withWatermark("ets", "1 hour")
       .groupBy(window(col("ets"), "1 day"))

@@ -86,7 +86,7 @@ object Extras50 {
     */
   def refSeabassRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_sbrt_").toString
+    val dir = Scratch.dir("graft_sbrt_")
     // staged DISTRIBUTED: station membership is a KEY rule ((key div
     // 500) % 2 — keys here are the multiples of 500, so both parities
     // occur), each task assembles and writes the stations that hashed

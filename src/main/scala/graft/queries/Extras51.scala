@@ -20,13 +20,13 @@ object Extras51 {
     * open and fail). Staged: two parquet parts plus planted junk.
     */
   def scanPathGlobFilter(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_glob_").toString
+    val dir = Scratch.dir("graft_glob_")
     val base = orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     base.filter(col("o_orderkey") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/a")
     base.filter(col("o_orderkey") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/b")
-    val flat = Files.createTempDirectory("graft_glob_flat_").toString
+    val flat = Scratch.dir("graft_glob_flat_")
     Seq("a", "b").zipWithIndex.foreach { case (sub, i) =>
       val part = Files.list(Paths.get(dir, sub)).toArray.toSeq
         .map(_.asInstanceOf[java.nio.file.Path])

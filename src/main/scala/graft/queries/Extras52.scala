@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -198,7 +196,7 @@ object Extras52 {
     val pub = recs
       .join(st.filter(col("status") === "PUBLISHED").select("lang"), Seq("lang"), "left_semi")
       .select("doc_id", "lang", "n_chars")
-    val path = Files.createTempDirectory("graft_subpipe_").toString + "/store"
+    val path = Scratch.dir("graft_subpipe_") + "/store"
     val store = new graft.sources.DatasetStore(s, path, "doc_id")
     val (storeCounts, newCounts) =
       if (pub.isEmpty) { // nothing cleared moderation: publish is a no-op

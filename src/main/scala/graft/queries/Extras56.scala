@@ -22,7 +22,7 @@ object Extras56 {
     */
   private def stageAliasSbDir(s: SparkSession, d: String): String = {
     import s.implicits._
-    val dirStr = Files.createTempDirectory("graft_asb_").toString
+    val dirStr = Scratch.dir("graft_asb_")
     val langs = documents(s, d).select("lang").distinct()
       .collect().map(_.getString(0)).sorted
     val aliased = langs.zipWithIndex.collect { case (l, i) if i % 2 == 1 => l }.toSet
@@ -88,7 +88,7 @@ object Extras56 {
     */
   private def stageUnitSbDir(s: SparkSession, d: String): String = {
     import s.implicits._
-    val dirStr = Files.createTempDirectory("graft_usb_").toString
+    val dirStr = Scratch.dir("graft_usb_")
     val langs = documents(s, d).select("lang").distinct()
       .collect().map(_.getString(0)).sorted
     val inFeet = langs.zipWithIndex.collect { case (l, i) if i % 2 == 1 => l }.toSet

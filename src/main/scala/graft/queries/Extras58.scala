@@ -22,7 +22,7 @@ object Extras58 {
     * the relational oracle.
     */
   def sinkCustomDsv2Txn(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_v2sink_").toString + "/orders"
+    val out = Scratch.dir("graft_v2sink_") + "/orders"
     val slice = orders(s, d)
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       .filter(col("o_orderkey") % 3 === 0)

@@ -19,7 +19,7 @@ object Extras63 {
     * rows read from any other leaf).
     */
   def sinkPartitionedMulticol(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mpart_").toString
+    val tmp = Scratch.dir("graft_mpart_")
     orders(s, d)
       .write.mode("overwrite")
       .partitionBy("o_orderstatus", "o_orderpriority").parquet(tmp)

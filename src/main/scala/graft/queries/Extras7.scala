@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -97,8 +95,6 @@ object Extras7 {
        |FROM base ORDER BY zkey, event_id LIMIT 200""".stripMargin
   }
 
-  private val csvDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** scan_csv_permissive — malformed-input ingest: orders serialized to
     * CSV with every 7th row corrupted (non-numeric price), read back in
     * PERMISSIVE mode with a corrupt-record column — bad rows surface as
@@ -109,9 +105,8 @@ object Extras7 {
     * recomputes all three from the planting rule.
     */
   def scanCsvPermissive(s: SparkSession, d: String): DataFrame = {
-    val dir = csvDirs.computeIfAbsent(d, _ => {
-      val out = Files.createTempDirectory(
-        s"graft_csv_${ProcessHandle.current().pid()}_").toString
+    val dir = Scratch.once("scan_csv_permissive", d) {
+      val out = Scratch.dir("graft_csv_")
       orders(s, d)
         .select(concat_ws(",",
           col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -120,7 +115,7 @@ object Extras7 {
           col("o_orderpriority")).as("value"))
         .write.mode("overwrite").text(out)
       out
-    })
+    }
     val sch = StructType(Seq(
       StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
       StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType),
@@ -142,8 +137,6 @@ object Extras7 {
        |    AS clean_revenue
        |FROM orders""".stripMargin
 
-  private val dppDirs = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** join_dynamic_partition_prune — DPP end to end: the fact table is
     * WRITTEN partitioned by event_type; the dim's selective filter is
     * on a non-key column, so no static partition filter exists — at
@@ -155,11 +148,9 @@ object Extras7 {
     * applies the dim rule (flagged types) directly.
     */
   def joinDynamicPartitionPrune(s: SparkSession, d: String): DataFrame = {
-    val (factDir, dimDir) = dppDirs.computeIfAbsent(d, _ => {
-      val f = Files.createTempDirectory(
-        s"graft_dppf_${ProcessHandle.current().pid()}_").toString
-      val dm = Files.createTempDirectory(
-        s"graft_dppd_${ProcessHandle.current().pid()}_").toString
+    val (factDir, dimDir) = Scratch.once("join_dynamic_partition_prune", d) {
+      val f = Scratch.dir("graft_dppf_")
+      val dm = Scratch.dir("graft_dppd_")
       events(s, d).write.mode("overwrite").partitionBy("event_type").parquet(f)
       events(s, d).select(col("event_type")).distinct()
         .select(col("event_type"),
@@ -167,7 +158,7 @@ object Extras7 {
             .cast("int").as("flag"))
         .write.mode("overwrite").parquet(dm)
       (f, dm)
-    })
+    }
     val fact = s.read.parquet(factDir)
     val dim = s.read.parquet(dimDir).filter(col("flag") === 1)
     fact.join(dim, Seq("event_type"))

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
 import graft.sources.DatasetStore
 
@@ -82,9 +81,6 @@ object Extras70 {
       |WHERE tok_before < budget_tok
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val vacuumState =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int, Int, Long)]()
-
   /** store_vacuum — storage reclamation for the keyed store (A2, the
     * missing half of C137's compact): three appends + a compact leave
     * FOUR segment directories on disk (three small ones still pinned
@@ -98,9 +94,8 @@ object Extras70 {
     * production default keeps a 10-min orphan window.)
     */
   def storeVacuum(s: SparkSession, d: String): DataFrame = {
-    val (dir, before, after, nvers) = vacuumState.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files.createTempDirectory(
-        s"graft_vacuum_${ProcessHandle.current().pid()}_").toString
+    val (dir, before, after, nvers) = Scratch.once("store_vacuum", d) {
+      val p = Scratch.dir("graft_vacuum_")
       val st = new DatasetStore(s, p, "o_orderkey")
       val o = orders(s, d)
       st.init(o.filter(col("o_orderkey") % 3 === 0))
@@ -110,7 +105,7 @@ object Extras70 {
       val b = st.segmentDirsOnDisk
       st.vacuum(keep = 1, graceMs = 0L)
       (p, b, st.segmentDirsOnDisk, st.versions().size.toLong)
-    })
+    }
     val st = new DatasetStore(s, dir, "o_orderkey")
     st.read()
       .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("revenue"))

@@ -356,18 +356,16 @@ object Pipeline {
   */
 private[graft] object NearDupComponents {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** (id, comp) labels of the near-dup graph for `d`, staged once. */
   def labels(s: SparkSession, d: String): DataFrame = {
-    val path = cache.computeIfAbsent(d, dir => {
-      val p = java.nio.file.Files.createTempDirectory("graft_cc_").toString + "/labels"
+    val path = Scratch.once("pipeline_cc_labels", d) {
+      val p = Scratch.dir("graft_cc_") + "/labels"
       // staged C5 pairs (NgramPairStage): the mining itself runs once
       // per corpus even though both this and the graded C5 row need it
-      val pairs = DedupExtras.dedupNgramJaccard(s, dir).select("doc_a", "doc_b")
+      val pairs = DedupExtras.dedupNgramJaccard(s, d).select("doc_a", "doc_b")
       minLabelComponents(pairs).write.parquet(p)
       p
-    })
+    }
     s.read.parquet(path)
   }
 

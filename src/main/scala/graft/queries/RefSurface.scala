@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,7 +29,7 @@ object RefSurface {
     */
   private[graft] def stageSbDir(s: SparkSession, d: String): String = {
     import s.implicits._
-    val dirStr = Files.createTempDirectory("graft_sb_").toString
+    val dirStr = Scratch.dir("graft_sb_")
     documents(s, d)
       .select(col("lang"), col("doc_id"), col("n_chars"))
       .as[(String, Long, Long)]
@@ -173,7 +173,7 @@ object RefSurface {
     * anti-join ∪ updates and delete = complement.
     */
   def storeMergeUpsert(s: SparkSession, d: String): DataFrame = {
-    val path = Files.createTempDirectory("graft_store_").toString + "/orders"
+    val path = Scratch.dir("graft_store_") + "/orders"
     val store = new graft.sources.DatasetStore(s, path, "o_orderkey")
     // project to the columns the exhibit reads before materializing:
     // the store writes its input verbatim, so pruning must be explicit
@@ -421,7 +421,7 @@ object RefSurface {
     import s.implicits._
     import java.io.{ByteArrayInputStream, File, FileOutputStream}
     import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
-    val outDir = Files.createTempDirectory("graft_zip_").toString
+    val outDir = Scratch.dir("graft_zip_")
     documents(s, d).filter(col("lang") === "en")
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .repartition(4, col("doc_id"))
@@ -466,15 +466,13 @@ object RefSurface {
       |  octet_length(encode(text)) AS n_bytes
       |FROM documents WHERE lang = 'en' ORDER BY doc_id""".stripMargin
 
-  private val indexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build (once per sfDir) and enable the inverted text index. */
   private[graft] def enableTextIndex(s: SparkSession, d: String): Unit = {
-    val idxPath = indexCache.computeIfAbsent(d, dir => {
-      val p = Files.createTempDirectory("graft_tidx_").toString
-      graft.plans.TextIndex.build(documents(s, dir), "doc_id", "text", p)
+    val idxPath = Scratch.once("text_index", d) {
+      val p = Scratch.dir("graft_tidx_")
+      graft.plans.TextIndex.build(documents(s, d), "doc_id", "text", p)
       p
-    })
+    }
     graft.plans.TextIndex.enable(s, idxPath, "doc_id", "text")
   }
 

@@ -81,7 +81,7 @@ object Relational {
     * oracle recomputes the same aggregate from the original parquet.
     */
   def scanCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv_").toString
+    val tmp = Scratch.dir("graft_csv_")
     val slice = lineitem(s, d)
       .filter(col("l_orderkey") % 100 === 0)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
@@ -100,7 +100,7 @@ object Relational {
     * back (A17 export analogue). Oracle recomputes from the source.
     */
   def sinkParquetRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_").toString
+    val tmp = Scratch.dir("graft_pq_")
     orders(s, d)
       .filter(col("o_totalprice") > 400000.0)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
@@ -119,7 +119,7 @@ object Relational {
     * in PlanSpec. Oracle recomputes from the source table.
     */
   def sinkPartitionedPrune(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part_").toString
+    val tmp = Scratch.dir("graft_part_")
     orders(s, d)
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(tmp)
     s.read.parquet(tmp)
@@ -146,8 +146,8 @@ object Relational {
     * its bucket so each bucket is exactly one file.
     */
   def joinBucketedColocated(s: SparkSession, d: String): DataFrame = {
-    // Table names carry the JVM pid: the backing data lives in this
-    // process's temp dir, so with a persistent metastore a *previous*
+    // Table names carry the JVM pid: the backing data lives under this
+    // process's scratch root, so with a persistent metastore a *previous*
     // process's registration (same dir hash, data long gone) must not
     // satisfy the tableExists guard below.
     val tag = java.lang.Long.toHexString(ProcessHandle.current().pid()) +
@@ -156,7 +156,7 @@ object Relational {
     val tc = s"graft_bkt_customer_$tag"
     this.synchronized {
       if (!s.catalog.tableExists(to) || !s.catalog.tableExists(tc)) {
-        val base = java.nio.file.Files.createTempDirectory("graft_bkt_").toString
+        val base = Scratch.dir("graft_bkt_")
         orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice")
           .repartition(8, col("o_custkey"))
           .write.mode("overwrite")

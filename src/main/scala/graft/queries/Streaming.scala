@@ -45,9 +45,6 @@ object Streaming {
   private[graft] def rawSchema(s: SparkSession, d: String): StructType =
     s.read.parquet(s"$d/events.parquet").schema
 
-  private val maxTsCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val stageCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Max event ts in nanos — bound for sentinel placement + filters.
     * The nanos unit is the suite-wide convention from the INT64-nanos
     * generator era; it is derived here from the µs file (UTC sessions,
@@ -55,10 +52,10 @@ object Streaming {
     * doing its arithmetic in ns.
     */
   private[graft] def maxTsNanos(s: SparkSession, d: String): Long =
-    maxTsCache.computeIfAbsent(d, dir => {
-      s.read.parquet(s"$dir/events.parquet")
+    Scratch.once("events_max_ts", d) {
+      s.read.parquet(s"$d/events.parquet")
         .agg(max(unix_micros(col("ts").cast("timestamp")))).head().getLong(0) * 1000L
-    })
+    }
 
   /** Naive wall-time (TIMESTAMP_NTZ value) for an epoch-nanos instant —
     * what a Row for the events schema needs in its ts slot. */
@@ -75,12 +72,12 @@ object Streaming {
     */
   private[graft] def stageDir(s: SparkSession, d: String, copies: Int, sentinels: Boolean,
       cached: Boolean = true): String =
-    if (cached) stageCache.computeIfAbsent(s"$d|$copies|$sentinels",
-      _ => buildStageDir(s, d, copies, sentinels))
+    if (cached) Scratch.once(s"stream_stage|$copies|$sentinels", d)(
+      buildStageDir(s, d, copies, sentinels))
     else buildStageDir(s, d, copies, sentinels)
 
   private def buildStageDir(s: SparkSession, d: String, copies: Int, sentinels: Boolean): String = {
-    val dir = Files.createTempDirectory(s"graft_stream_${ctr.incrementAndGet()}_")
+    val dir = Paths.get(Scratch.dir("graft_stream_"))
     val src = Paths.get(s"$d/events.parquet")
     val t0 = System.currentTimeMillis() - 120000
     var seq = 0
@@ -97,14 +94,14 @@ object Streaming {
         .zipWithIndex.foreach { case ((uid, ns), i) =>
           val row = Row(-1000L - i, ntzFromNanos(ns), uid, "sentinel", 0.0, "{}")
           val one = s.createDataFrame(java.util.List.of(row), sch).coalesce(1)
-          val tmp = Files.createTempDirectory("graft_sent_")
-          one.write.mode("overwrite").parquet(tmp.toString)
-          val ls = Files.list(tmp)
+          val tmp = Scratch.dir("graft_sent_")
+          one.write.mode("overwrite").parquet(tmp)
+          val ls = Files.list(Paths.get(tmp))
           val part = try ls.filter(p => p.toString.endsWith(".parquet")).findFirst().get()
             finally ls.close()
           val dst = dir.resolve(f"sentinel-$i.parquet")
           Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          deleteTree(tmp)
+          Scratch.delete(tmp)
           stamp(dst)
         }
     }
@@ -132,8 +129,8 @@ object Streaming {
     * `body`; a memory sink's table outlives its checkpoint.
     */
   private[graft] def withScratchCheckpoints[A](n: Int)(body: Seq[String] => A): A = {
-    val dirs = Seq.fill(n)(Files.createTempDirectory("graft_ckpt_"))
-    try body(dirs.map(_.toString)) finally dirs.foreach(deleteTree)
+    val dirs = Seq.fill(n)(Scratch.dir("graft_ckpt_"))
+    try body(dirs) finally dirs.foreach(Scratch.delete)
   }
 
   private[graft] def withScratchCheckpoint[A](body: String => A): A =
@@ -146,13 +143,6 @@ object Streaming {
       val q = start(s, w, ckpt)
       q.awaitTermination()
       q
-    }
-
-  private[graft] def deleteTree(root: Path): Unit =
-    if (Files.exists(root)) {
-      val paths = Files.walk(root)
-      try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-      finally paths.close()
     }
 
   /** The one place the engine starts a stream: `w` on checkpoint
@@ -437,7 +427,7 @@ object Streaming {
     val sch = rawSchema(s, d)
     val dir = stageDir(s, d, copies = 2, sentinels = false)
     val store = new graft.sources.DatasetStore(
-      s, Files.createTempDirectory("graft_fbu_").toString + "/users", "user_id")
+      s, Scratch.dir("graft_fbu_") + "/users", "user_id")
     def mergeBatch(batch: DataFrame, cur: Option[DataFrame]): DataFrame = {
       val agg = batch
         .withColumn("ets", col("ts").cast("timestamp"))

@@ -28,6 +28,12 @@ class BenchPlanSpec extends AnyFunSuite {
     }
   }
 
+  test("flagship and spotlight summary names exist in the registry") {
+    val names = Bench.flagships ++ Bench.spotlight
+    val missing = names.filterNot(SparkEntry.queries.contains)
+    assert(missing.isEmpty, s"summary names missing from the registry: ${missing.mkString(", ")}")
+  }
+
   /** The summary line `Bench.main` prints, for `times` and `errors`. */
   private def summaryLine(times: Map[String, Double], errors: Seq[String]): (Seq[String], String) = {
     def line(queries: String) = Bench.summaryLine(99999.999, 999.999, 99, times.size,

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.Scratch
 
 /** Wave-18 properties the DuckDB oracle can't express. */
 class Extras118Spec extends SparkSpec {
@@ -45,7 +46,7 @@ class Extras118Spec extends SparkSpec {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.SaveMode
     // copy the fixture, plant one orphan of each kind, re-run the audit
-    val dir = Files.createTempDirectory("graft_orph_").toString
+    val dir = Scratch.dir("graft_orph_")
     Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings").foreach { t =>
       Files.copy(Paths.get(s"$sf/$t.parquet"), Paths.get(dir, s"$t.parquet"),

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.queries.Scratch
 
 /** Wave-20 properties the DuckDB oracle can't express. */
 class Extras120Spec extends SparkSpec {
@@ -33,7 +34,7 @@ class Extras120Spec extends SparkSpec {
         s"${r.getString(0)}: effective ${r.getDouble(4)} != raw ${r.getLong(3)} on unique corpus")
     }
     // planted: 3 copies of one 100-char doc + 1 unique 50-char doc
-    val dir = Files.createTempDirectory("graft_dupw_").toString
+    val dir = Scratch.dir("graft_dupw_")
     val txt = ("tok " * 25).trim // 99 chars
     val rows = Seq(
       Row(1L, txt, "en", "s0", txt.length.toLong),

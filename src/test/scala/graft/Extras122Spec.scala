@@ -5,13 +5,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.queries.Scratch
 
 /** Wave-22 properties the DuckDB oracle can't express. */
 class Extras122Spec extends SparkSpec {
 
   test("time_changepoint_binary: finds a planted mean shift exactly") {
     // 120 flat days at $100, then 120 at $300: split must land at day 120
-    val dir = Files.createTempDirectory("graft_cpt_").toString
+    val dir = Scratch.dir("graft_cpt_")
     val rows = (0 until 240).map { i =>
       Row(i.toLong, 1L, 1L, 1, 1.0,
         if (i < 120) 100.00 else 300.00, 0.0, 0.0, "N", "O",

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.Scratch
 
 /** Wave-26 properties the DuckDB oracle can't express. */
 class Extras126Spec extends SparkSpec {
@@ -40,7 +41,7 @@ class Extras126Spec extends SparkSpec {
     import java.nio.file.Files
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_pett_").toString
+    val dir = Scratch.dir("graft_pett_")
     val rows = (0 until 200).map { i =>
       Row(i.toLong, 1L, 1L, 1, 1.0,
         if (i < 100) 100.00 + (i % 7) else 500.00 + (i % 7), 0.0, 0.0, "N", "O",

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.queries.Scratch
 
 /** Wave-28 properties the DuckDB oracle can't express. */
 class Extras128Spec extends SparkSpec {
@@ -16,7 +17,7 @@ class Extras128Spec extends SparkSpec {
       assert(r.getLong(3) == 0L)
     }
     // planted: 2 copies of one text (ids 10, 11) + a longer unique doc
-    val dir = Files.createTempDirectory("graft_surv_").toString
+    val dir = Scratch.dir("graft_surv_")
     val rows = Seq(
       Row(10L, "dup text here", "en", "s0", 13L),
       Row(11L, "dup text here", "en", "s0", 13L),

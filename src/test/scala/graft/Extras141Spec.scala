@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.Scratch
 
 /** Wave-41 properties: upsertBranch key-replacement semantics, brute
   * renko/OOV/position replays.
@@ -10,7 +11,7 @@ class Extras141Spec extends SparkSpec {
   test("store_merge_branches: outcome census matches the key arithmetic; upsertBranch replaces keys") {
     import spark.implicits._
     // direct API contract first: upsertBranch must REPLACE same-key rows
-    val base = java.nio.file.Files.createTempDirectory("graft_ubr_").toString
+    val base = Scratch.dir("graft_ubr_")
     val st = new graft.sources.DatasetStore(spark, s"$base/store", "k")
     st.init(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     st.createBranch("f", st.headVersion())

@@ -6,29 +6,21 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.LocalCheckpointFileManager
+import graft.queries.Scratch
 
 /** The fork-free checkpoint manager keeps the commit contract of
   * Spark's default one: atomic publish with the `.crc` sidecar,
   * cancel leaves nothing, no silent overwrite, the same permission
   * bits — and it refuses checkpoints off the local file system.
   */
-class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LocalCheckpointFileManagerSpec extends AnyFunSuite {
 
   private val conf = new Configuration()
 
-  private val scratchDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-  private def scratch(): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("graft_cfm_")
-    scratchDirs += dir
-    dir
-  }
-
-  override def afterAll(): Unit = scratchDirs.foreach(queries.Streaming.deleteTree)
+  private def scratch(): java.nio.file.Path = Paths.get(Scratch.dir("graft_cfm_"))
 
   private def manager(dir: java.nio.file.Path) =
     new LocalCheckpointFileManager(new Path(dir.toUri), conf)

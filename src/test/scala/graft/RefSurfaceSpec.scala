@@ -1,10 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import graft.functions.{GeoOps, Validation}
 import graft.sources.SbReader
+import graft.queries.Scratch
 
 /** Unit coverage for the reference-surface building blocks (SURVEY
   * §2-A A1/A8/A15) beyond the query-level oracles: header parsing
@@ -47,7 +48,7 @@ class RefSurfaceSpec extends SparkSpec {
   }
 
   test("readLong + readWide over a staged directory") {
-    val dir = Files.createTempDirectory("graft_sbspec_")
+    val dir = Paths.get(Scratch.dir("graft_sbspec_"))
     Files.writeString(dir.resolve("a.sb"), sbText)
     val long = SbReader.readLong(spark, s"$dir/*.sb")
     assert(long.count() == 9) // 3 records × 3 fields
@@ -73,7 +74,7 @@ class RefSurfaceSpec extends SparkSpec {
   test("DatasetStore CRUD: init, append, upsert replaces keys, delete filters") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val path = Files.createTempDirectory("graft_storespec_").toString + "/t"
+    val path = Scratch.dir("graft_storespec_") + "/t"
     val store = new graft.sources.DatasetStore(spark, path, "id")
     store.init(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "v"))
     store.append(Seq((3L, "c", 30.0)).toDF("id", "name", "v"))
@@ -90,7 +91,7 @@ class RefSurfaceSpec extends SparkSpec {
 
   test("DatasetStore time travel: every commit is a readable snapshot; expire prunes") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_storespec_").toString + "/tt"
+    val path = Scratch.dir("graft_storespec_") + "/tt"
     val store = new graft.sources.DatasetStore(spark, path, "id")
     store.init(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"))      // v1
     store.append(Seq((3L, 30.0)).toDF("id", "v"))                 // v2
@@ -111,7 +112,7 @@ class RefSurfaceSpec extends SparkSpec {
   test("DatasetStore compact: one segment after, data identical, time travel crosses the boundary") {
     import spark.implicits._
     import graft.sources.DatasetStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_compact_").toString
+    val dir = Scratch.dir("graft_store_compact_")
     val store = new DatasetStore(spark, dir, "id")
     store.init(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"))   // v1, seg 1
     store.append(Seq((3L, 30.0)).toDF("id", "v"))             // v2, seg 2
@@ -127,7 +128,7 @@ class RefSurfaceSpec extends SparkSpec {
 
   test("DatasetStore appendAtomic: 8 racing writers all land, versions are gapless, snapshots monotone") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_storespec_").toString + "/cas"
+    val path = Scratch.dir("graft_storespec_") + "/cas"
     val store = new graft.sources.DatasetStore(spark, path, "id")
     store.init(Seq((0L, 0.0)).toDF("id", "v")) // v1
     val writers = (1 to 8).map { i =>
@@ -161,7 +162,7 @@ class RefSurfaceSpec extends SparkSpec {
 
   test("DatasetStore interleaved appendAtomic/appendBranch: main and branch lineages never graft") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_storespec_").toString + "/ilv"
+    val path = Scratch.dir("graft_storespec_") + "/ilv"
     val store = new graft.sources.DatasetStore(spark, path, "id")
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.getLong(0)).sorted.toSeq
@@ -199,7 +200,7 @@ class RefSurfaceSpec extends SparkSpec {
     // is the on-disk link(2) CAS chain, so this exercises exactly what
     // two separate JVMs would
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_storespec_").toString + "/brcas"
+    val path = Scratch.dir("graft_storespec_") + "/brcas"
     val s1 = new graft.sources.DatasetStore(spark, path, "id")
     val s2 = new graft.sources.DatasetStore(spark, path, "id")
     s1.init(Seq((0L, 0.0)).toDF("id", "v")) // v1
@@ -223,7 +224,7 @@ class RefSurfaceSpec extends SparkSpec {
 
   test("GraftCsvSink round-trips embedded newlines, quotes and commas") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_csvsink_").toString + "/rt"
+    val out = Scratch.dir("graft_csvsink_") + "/rt"
     val rows = Seq(
       (1L, "line one\nline two"),        // embedded newline — needs multiLine
       (2L, "say \"hi\" now"),            // embedded quote — needs escape="

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import graft.queries.{DedupExtras, LlmOps, Relational}
+import graft.queries.Scratch
 
 /** Behavioral tests for the no-oracle operators: the HLL sketch is
   * bounds-checked against the exact count; MinHash and SimHash must
@@ -49,7 +50,7 @@ class SketchSpec extends SparkSpec {
     * territory, hamming 0). Docs 5+ are unrelated filler.
     */
   private lazy val plantedDir: String = {
-    val dir = Files.createTempDirectory("graft_planted_").toString
+    val dir = Scratch.dir("graft_planted_")
     val base = ("the quick scan reads every column of the wide table before the merge join starts " +
       "work and the planner chooses a broadcast side for the small build relation while the " +
       "probe side streams rows through the exchange into the final aggregation stage")

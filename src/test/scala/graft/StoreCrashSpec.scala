@@ -6,6 +6,7 @@ import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
+import graft.queries.Scratch
 
 /** SIGKILL crash-consistency test (r10 verdict task #4): a forked
   * writer JVM is killed -9 mid-commit, so the store root is left in
@@ -34,31 +35,16 @@ import scala.jdk.CollectionConverters._
   */
 class StoreCrashSpec extends SparkSpec {
 
-  private val jdk17AddOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   test("SIGKILL mid-commit: committed data exact, orphans invisible and vacuumed, store writable") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_storecrash_").toString
+    val base = Scratch.dir("graft_storecrash_")
     val dir = s"$base/store"
     val store = new graft.sources.DatasetStore(spark, dir, "k")
     store.init(Seq((0L, "init")).toDF("k", "payload"))
 
     // --- fork the crash writer, let it make progress, SIGKILL it
-    val javaBin = new File(new File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val cp = sys.props("java.class.path")
     val log = new File(base, "crash_child.log")
-    val cmd = Seq(javaBin) ++ jdk17AddOpens ++ Seq(
-      "-Xmx1500m", "-XX:ReservedCodeCacheSize=128m",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", cp, "graft.StoreCrashChild", dir)
+    val cmd = ChildJvm.command("graft.StoreCrashChild", Seq(dir))
     val p = new ProcessBuilder(cmd.asJava)
       .redirectErrorStream(true).redirectOutput(log).start()
     def acked(): Seq[Long] =

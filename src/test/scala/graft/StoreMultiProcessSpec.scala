@@ -6,6 +6,7 @@ import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
+import graft.queries.Scratch
 
 /** MULTI-PROCESS DatasetStore contention test (r8 verdict task #3):
   * the store's core guarantee — manifest-CAS via exclusive `link(2)`,
@@ -43,32 +44,17 @@ class StoreMultiProcessSpec extends SparkSpec {
   private val NWriters = 3
   private val NAppends = 8
 
-  private val jdk17AddOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   test("appendAtomic + appendBranch linearize across forked OS processes") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_storerace_").toString
+    val base = Scratch.dir("graft_storerace_")
     val dir = s"$base/store"
     val store = new graft.sources.DatasetStore(spark, dir, "k")
     store.init(Seq((0L, "init", "main")).toDF("k", "writer", "side"))
     store.createBranch("race", store.headVersion())
 
-    val javaBin = new File(new File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val cp = sys.props("java.class.path") // tests fork, so this is the full test classpath
     val procs = (1 to NWriters).map { w =>
       val log = new File(base, s"child_$w.log")
-      val cmd = Seq(javaBin) ++ jdk17AddOpens ++ Seq(
-        "-Xmx1500m", "-XX:ReservedCodeCacheSize=128m",
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", cp, "graft.StoreRaceChild", dir, w.toString, NAppends.toString)
+      val cmd = ChildJvm.command("graft.StoreRaceChild", Seq(dir, w.toString, NAppends.toString))
       val p = new ProcessBuilder(cmd.asJava)
         .redirectErrorStream(true).redirectOutput(log).start()
       (w, p, log)
@@ -133,7 +119,7 @@ class StoreMultiProcessSpec extends SparkSpec {
 
   test("pinned readAt(v_old) reader survives concurrent compact+vacuum (grace window contract)") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_storegc_").toString
+    val base = Scratch.dir("graft_storegc_")
     val dir = s"$base/store"
     val store = new graft.sources.DatasetStore(spark, dir, "k")
     store.init((0L until 100L).map(k => (k, "base")).toDF("k", "tag"))
@@ -141,14 +127,10 @@ class StoreMultiProcessSpec extends SparkSpec {
     val vOld = store.headVersion()
 
     // fork the pinned reader; wait for it to resolve vOld's manifest
-    val javaBin = new File(new File(sys.props("java.home"), "bin"), "java").getAbsolutePath
     val ready = new File(base, "reader_ready")
     val log = new File(base, "reader.log")
-    val cmd = Seq(javaBin) ++ jdk17AddOpens ++ Seq(
-      "-Xmx1500m", "-XX:ReservedCodeCacheSize=128m",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", sys.props("java.class.path"), "graft.StoreReaderChild",
-      dir, vOld.toString, "6000", ready.getAbsolutePath)
+    val cmd = ChildJvm.command("graft.StoreReaderChild",
+      Seq(dir, vOld.toString, "6000", ready.getAbsolutePath))
     val p = new ProcessBuilder(cmd.asJava)
       .redirectErrorStream(true).redirectOutput(log).start()
     val t0 = System.currentTimeMillis()

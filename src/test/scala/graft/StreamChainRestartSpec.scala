@@ -7,6 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.TimestampNTZType
+import graft.queries.Scratch
 
 /** Long-chain streaming restart (r10 verdict task #5): exactly-once
   * output equality across a restart of the CASCADING two-stateful-
@@ -53,11 +54,11 @@ class StreamChainRestartSpec extends SparkSpec {
           .agg(max(unix_micros(col("ts").cast("timestamp")))).head().getLong(0) * 1000L
 
         // --- stage: thirds as single parquet files with increasing mtimes
-        val dir = Files.createTempDirectory("graft_chainrestart_")
+        val dir = Paths.get(Scratch.dir("graft_chainrestart_"))
         val t0 = System.currentTimeMillis() - 120000
         var fseq = 0
         def stage(df: DataFrame, name: String): Unit = {
-          val tmp = Files.createTempDirectory("graft_chainpart_")
+          val tmp = Paths.get(Scratch.dir("graft_chainpart_"))
           df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet")).findFirst().get()
           val dst = dir.resolve(name)
@@ -68,7 +69,7 @@ class StreamChainRestartSpec extends SparkSpec {
         stage(events.filter(micros <= t1), "a1.parquet")
         stage(events.filter(micros > t1 && micros <= t2), "a2.parquet")
 
-        val ckpt = Files.createTempDirectory("graft_chainrestart_ckpt_").toString
+        val ckpt = Scratch.dir("graft_chainrestart_ckpt_")
         val emitted = collection.mutable.ArrayBuffer[(java.sql.Timestamp, Long, Long, Int)]()
         def runOnce(run: Int): Unit = {
           val hourly = queries.Streaming.eventStream(spark, dir.toString, sch, maxFilesPerTrigger = Some(1))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.Streaming
+import graft.queries.{Scratch, Streaming}
 
 /** Streaming ≡ batch equivalence (SURVEY §5.3): the streaming results
   * must equal their batch formulations on the same input. Two of the
@@ -31,39 +31,31 @@ class StreamingSpec extends SparkSpec {
       "append-mode stream withheld windows — sentinel flush broken")
   }
 
+  /** Entries of the run's scratch root whose names start with `prefix`. */
+  private def scratchEntries(prefix: String): Set[String] = {
+    val ls = java.nio.file.Files.list(Scratch.root)
+    try ls.map(_.getFileName.toString).filter(_.startsWith(prefix)).toArray.map(_.toString).toSet
+    finally ls.close()
+  }
+
   test("stream calls delete their scratch checkpoints once the replay has terminated") {
-    import java.nio.file.{Files, Paths}
-    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    def checkpoints(): Set[String] = {
-      val ls = Files.list(tmp)
-      try ls.map(_.getFileName.toString).filter(_.startsWith("graft_ckpt_"))
-        .toArray.map(_.toString).toSet
-      finally ls.close()
-    }
-    val before = checkpoints()
+    val before = scratchEntries("graft_ckpt_")
     (1 to 2).foreach(_ => Streaming.streamTumblingCount(spark, sf).collect())
-    val leaked = checkpoints() -- before
+    val leaked = scratchEntries("graft_ckpt_") -- before
     assert(leaked.isEmpty, s"stream_tumbling_count left checkpoints behind: $leaked")
   }
 
   test("a sentinel stage build leaves no graft_sent_ writer dir behind") {
     import java.nio.file.{Files, Paths}
-    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    def sentinelDirs(): Set[String] = {
-      val ls = Files.list(tmp)
-      try ls.map(_.getFileName.toString).filter(_.startsWith("graft_sent_"))
-        .toArray.map(_.toString).toSet
-      finally ls.close()
-    }
-    val before = sentinelDirs()
+    val before = scratchEntries("graft_sent_")
     val dir = Paths.get(Streaming.stageDir(spark, sf, copies = 1, sentinels = true, cached = false))
     try {
       val staged = Files.list(dir)
       try assert(staged.filter(_.getFileName.toString.startsWith("sentinel-")).count() == 2)
       finally staged.close()
-      val leaked = sentinelDirs() -- before
+      val leaked = scratchEntries("graft_sent_") -- before
       assert(leaked.isEmpty, s"sentinel build left writer dirs behind: $leaked")
-    } finally Streaming.deleteTree(dir)
+    } finally Scratch.delete(dir.toString)
   }
 
   test("checkpoint restart resumes exactly-once: new files only, no re-count") {
@@ -76,8 +68,8 @@ class StreamingSpec extends SparkSpec {
       // lands. The file-source offsets in the checkpoint must make run 2
       // process ONLY file B — the resume contract a production pipeline
       // relies on. Total must equal exactly one count of A + B.
-      val dir = Files.createTempDirectory("graft_resume_").toString
-      val ckpt = Files.createTempDirectory("graft_resume_ckpt_").toString
+      val dir = Scratch.dir("graft_resume_")
+      val ckpt = Scratch.dir("graft_resume_ckpt_")
       val sch = Streaming.rawSchema(spark, sf)
       val total = new java.util.concurrent.atomic.AtomicLong(0)
       def copyIn(name: String, atMs: Long): Unit = {
@@ -130,8 +122,8 @@ class StreamingSpec extends SparkSpec {
       try {
         spark.conf.set(key,
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val dir = Files.createTempDirectory("graft_rocks_resume_").toString
-        val ckpt = Files.createTempDirectory("graft_rocks_ckpt_").toString
+        val dir = Scratch.dir("graft_rocks_resume_")
+        val ckpt = Scratch.dir("graft_rocks_ckpt_")
         val sch = Streaming.rawSchema(spark, sf)
         val latest = new java.util.concurrent.ConcurrentHashMap[java.sql.Timestamp, Long]()
         def copyIn(name: String, atMs: Long): Unit = {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import graft.queries.Scratch
 
 /** Unit coverage for the hundredth wave beyond the query-level oracles:
   * planted-duplicate detection for the exact-substring miner, snapshot
@@ -25,7 +26,7 @@ class SubstringDedupSpec extends SparkSpec {
       (3L, "entirely unrelated text " + "c" * 100)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
       .withColumn("n_chars", length(col("text")))
-    val dir = Files.createTempDirectory("graft_ssd_").toString
+    val dir = Scratch.dir("graft_ssd_")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = graft.queries.Extras100.dedupSubstringExact(spark, dir).collect()
     assert(out.nonEmpty, "planted duplicate span not found")
@@ -89,7 +90,7 @@ class SubstringDedupSpec extends SparkSpec {
       (3L, "entirely unrelated filler text " + "z" * 120)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
       .withColumn("n_chars", length(col("text")))
-    val dir = Files.createTempDirectory("graft_cp_").toString
+    val dir = Scratch.dir("graft_cp_")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rolling = graft.queries.Extras100.dedupSubstringRolling(spark, dir).collect()
     assert(rolling.nonEmpty, "duplicate behind an astral-char prefix not found")
@@ -111,7 +112,7 @@ class SubstringDedupSpec extends SparkSpec {
       (3L, "entirely unrelated filler text " + "z" * 120)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
       .withColumn("n_chars", length(col("text")))
-    val dir = Files.createTempDirectory("graft_roll_").toString
+    val dir = Scratch.dir("graft_roll_")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rolling = graft.queries.Extras100.dedupSubstringRolling(spark, dir).collect()
     assert(rolling.nonEmpty, "misaligned duplicate not found by the rolling miner")
