@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The registry benchmark: times every SparkEntry query at the given sf,
-  * in [[SparkEntry.namedQueryMaps]] order, in this one JVM.
+  * in [[SparkEntry.registry]] order, in this one JVM.
   *
   * One JVM for the whole run: r14's controlled runs found no JVM aging
   * at the current registry size (code cache plateaus at ~156/528 MB
@@ -222,9 +222,9 @@ object Bench {
   }
 
   /** The full-run query order: the registry files in
-    * [[SparkEntry.namedQueryMaps]] order, each file's keys sorted. */
+    * [[SparkEntry.registry]] order, each file's keys sorted. */
   private[graft] def fullRunOrder: Seq[String] =
-    SparkEntry.namedQueryMaps.flatMap(_._2.keys.toSeq.sorted)
+    SparkEntry.registry.flatMap(_._2.keys.toSeq.sorted)
 
   // 3-decimal seconds: ~ms resolution is all the comparison needs
   private def f(v: Double): String =

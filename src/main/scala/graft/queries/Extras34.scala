@@ -190,7 +190,7 @@ object Extras34 {
   /** store_concurrent_cas — MULTI-WRITER commits on the dataset store:
     * four writers append disjoint order slices CONCURRENTLY through
     * [[graft.sources.DatasetStore.appendAtomic]]'s manifest-CAS
-    * (an exclusive hard-link — createLink/EEXIST — onto the next
+    * (an exclusive hard-link — link(2)/EEXIST — onto the next
     * version file; ATOMIC_MOVE silently replaces and is NOT exclusive,
     * per DatasetStore's own doc — exactly one
     * winner per version, losers rebase and retry; correct for appends
@@ -203,8 +203,8 @@ object Extras34 {
     * orphaned snapshot (appendAtomic's documented lineage guard), so
     * `versions().size` is ≥5 but race-dependent — asserting it made
     * this row flaky (observed 6 under a real interleaving in r9).
-    * This is the upstream A16 multi-writer workflow the single-writer
-    * store (A2) could not express.
+    * This is the upstream A16 multi-writer workflow; every store write
+    * (A2's upsert, delete and compact too) commits through the same CAS.
     */
   def storeConcurrentCas(s: SparkSession, d: String): DataFrame = {
     val dir = Scratch.dir("graft_cas_")

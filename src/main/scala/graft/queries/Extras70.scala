@@ -90,8 +90,9 @@ object Extras70 {
     * carries the on-disk segment census (4 → 1) and surviving version
     * count alongside the full-data aggregate the oracle recomputes
     * from source — equality proves vacuum deleted ONLY dead bytes.
-    * (grace=0 is safe under the store's single-writer contract; the
-    * production default keeps a 10-min orphan window.)
+    * (grace=0 is safe here because nothing else writes this store;
+    * it is the store's one single-writer operation, and the production
+    * default keeps a 10-min orphan window.)
     */
   def storeVacuum(s: SparkSession, d: String): DataFrame = {
     val (dir, before, after, nvers) = Scratch.once("store_vacuum", d) {

@@ -2,11 +2,15 @@ package graft.sources
 
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
+
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.queries.Scratch
 
 /** Keyed dataset store on plain Parquet — the reference's A2 CRUD
   * surface (SURVEY §2-A: UPSTREAM `ocdb/db/mongo_db_driver.py ::
@@ -14,32 +18,48 @@ import org.apache.spark.sql.functions._
   * relational operations. No Delta/Iceberg jars exist in this
   * environment (SURVEY §7), so the store implements the minimal commit
   * protocol those formats provide: immutable segment directories plus
-  * an atomically-replaced CURRENT manifest listing the live segments.
+  * numbered manifests listing the live segments.
+  *
+  * ONE COMMIT PROTOCOL for every write (see [[commitOn]]): a write reads
+  * its ref's head, claims the next `MANIFEST.vN` of the shared version
+  * log, then claims the ref's next pointer generation — both claims are
+  * POSIX `link(2)` ([[DatasetStore.claim]]), the ONE local-FS primitive
+  * that is simultaneously atomic, exclusive (EEXIST if the name is
+  * taken; it never replaces) and
+  * content-complete (the link target is a fully-written temp file, so a
+  * manifest either does not exist or is whole). NB `Files.move` without
+  * REPLACE_EXISTING is NOT a CAS: the JDK implements it as an existence
+  * check plus rename(2), which silently replaces — two racers can both
+  * "win" and one commit is lost (observed in the 8-writer race spec
+  * before the store moved to link(2)). A writer that loses either
+  * claim re-reads the head and rebuilds, so concurrent writers — threads
+  * or separate processes — never lose each other's commits. The one
+  * single-writer caveat left is `vacuum(graceMs = 0)`.
   *
   * Snapshot isolation: data directories are never mutated after
-  * commit; a reader resolves CURRENT once and reads only directories
-  * it names, so it sees exactly one committed snapshot — the manifest
-  * swap is a single atomic file move (no rename window where the store
-  * has no live data, unlike a directory-swap scheme). A failed write
-  * leaves an orphan segment and the old manifest intact. At 100 TB the
-  * same protocol holds with partition-scoped rewrites: upsert rewrites
-  * only segments containing touched keys and the manifest flips once.
+  * commit; a reader resolves main's head once and reads only directories
+  * its manifest names, so it sees exactly one committed snapshot. A
+  * failed write leaves an orphan segment and the old head intact. At
+  * 100 TB the same protocol holds with partition-scoped rewrites: upsert
+  * rewrites only segments containing touched keys and the head moves
+  * once.
   *
   * Crash recovery (proven by StoreCrashSpec with a SIGKILLed writer):
   * a writer killed at ANY point of the commit path leaves one of three
   * states, all absorbed without repair tooling — (1) a truncated
   * segment dir (kill mid-parquet-write), (2) a complete segment no
-  * manifest references (kill between segment write and manifest link),
-  * (3) a linked MANIFEST.vN that never became a head generation (kill
-  * between writeAtomic and advanceMainHead). Readers resolve manifests
-  * → states 1–2 are invisible; head resolution is the monotone pointer
-  * chain → state 3 is a readable-but-unreachable snapshot, never a
-  * head. The next vacuum/prune reclaims 1–2 as orphans (grace-window
+  * manifest references (kill between segment write and manifest claim),
+  * (3) a claimed MANIFEST.vN that never became a head generation (kill
+  * between the manifest claim and the pointer claim). Readers resolve
+  * manifests → states 1–2 are invisible; head resolution is the monotone
+  * pointer chain → state 3 is a readable-but-unreachable snapshot, never
+  * a head. The next vacuum/prune reclaims 1–2 as orphans (grace-window
   * Iceberg-style retention); the next commit simply claims the next
   * version/generation. No fsync ordering is assumed beyond what
   * ATOMIC_MOVE + link(2) give on a POSIX filesystem.
   */
 class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
+  import DatasetStore.{claim, readLines}
 
   private val root = new File(path)
   private val seq = new AtomicLong(0)
@@ -53,41 +73,52 @@ class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
       case ManifestName(v) => v.toLong
     }.sorted.toSeq
 
-  /** Live segment dirs named by the CURRENT manifest (one per line). */
+  /** Segment list of committed snapshot `v` (one name per line);
+    * reading an expired or unknown version fails loudly.
+    */
+  private def readManifest(v: Long): Seq[String] = {
+    require(manifestFile(v).exists, s"store at $path has no snapshot v$v")
+    readLines(manifestFile(v))
+  }
+
+  /** Live segment dirs named by the CURRENT manifest. */
   private def segments(): Seq[String] = {
     require(currentFile.exists, s"store at $path not initialized")
-    new String(Files.readAllBytes(currentFile.toPath), UTF_8)
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
+    readLines(currentFile)
   }
 
   /** Segments of main's AUTHORITATIVE current snapshot: resolved
-    * through the main-head pointer chain (cross-process monotone CAS —
-    * see [[appendAtomic]]), not through the CURRENT file. CURRENT is a
-    * best-effort cache for external tools: with concurrent appenders
-    * in SEPARATE PROCESSES, the last process to rewrite it can be a
-    * stale winner (the per-path lock that orders the rewrite is
+    * through the main-head pointer chain, not through the CURRENT file.
+    * CURRENT is a best-effort cache for external tools: with concurrent
+    * writers in SEPARATE PROCESSES, the last process to rewrite it can
+    * be a stale winner (the per-path lock that orders the rewrite is
     * JVM-local), so a read that trusted CURRENT could transiently
-    * regress past another process's committed append. The head chain
-    * cannot regress by construction (generations are claimed with an
-    * exclusive link(2) CAS and never rewritten) — proven across forked
-    * JVMs by StoreMultiProcessSpec.
+    * regress past another process's commit. The head chain cannot
+    * regress by construction (generations are claimed with an exclusive
+    * link(2) and never rewritten) — proven across forked JVMs by
+    * StoreMultiProcessSpec.
     */
   private def liveSegments(): Seq[String] = {
-    val head = mainHeadVersion()
+    val head = headVersion()
     if (head > 0 && manifestFile(head).exists) readManifest(head) else segments()
   }
 
-  def read(): DataFrame =
-    spark.read.parquet(liveSegments().map(s => new File(root, s).toString): _*)
+  /** The one read body: the segments `segs` as one DataFrame, with
+    * parquet schema merging across them when `merged`.
+    */
+  private def load(segs: Seq[String], merged: Boolean): DataFrame = {
+    val reader = if (merged) spark.read.option("mergeSchema", "true") else spark.read
+    reader.parquet(segs.map(s => new File(root, s).toString): _*)
+  }
+
+  def read(): DataFrame = load(liveSegments(), merged = false)
 
   /** Read with parquet schema merging across segments — the
     * schema-evolution path: segments written after a column was added
     * carry it, earlier segments surface it as NULL. Costs a footer
     * read per segment (why it is not the default read()).
     */
-  def readMerged(): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(liveSegments().map(s => new File(root, s).toString): _*)
+  def readMerged(): DataFrame = load(liveSegments(), merged = true)
 
   /** Time travel: read the store as of snapshot version `v` (from
     * [[versions]]). Possible because segments are immutable and every
@@ -95,32 +126,21 @@ class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
     * Delta/Iceberg `VERSION AS OF`. Reading an expired or unknown
     * version fails loudly.
     */
-  def readAt(v: Long): DataFrame = {
-    require(manifestFile(v).exists, s"store at $path has no snapshot v$v")
-    val segs = new String(Files.readAllBytes(manifestFile(v).toPath), UTF_8)
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    spark.read.parquet(segs.map(s => new File(root, s).toString): _*)
-  }
+  def readAt(v: Long): DataFrame = load(readManifest(v), merged = false)
 
   /** [[readAt]] with parquet schema merging across the snapshot's
     * segments (see [[readMerged]]) — the change-feed path needs it so a
     * version whose segments straddle a schema evolution surfaces every
     * column.
     */
-  private def readAtMerged(v: Long): DataFrame = {
-    require(manifestFile(v).exists, s"store at $path has no snapshot v$v")
-    val segs = new String(Files.readAllBytes(manifestFile(v).toPath), UTF_8)
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    spark.read.option("mergeSchema", "true")
-      .parquet(segs.map(s => new File(root, s).toString): _*)
-  }
+  private def readAtMerged(v: Long): DataFrame = load(readManifest(v), merged = true)
 
   /** Write one new immutable segment, return its manifest name. The
-    * name must be unique across store INSTANCES and JVMs (the
-    * multi-writer deployment [[appendAtomic]] invites): a random suffix
-    * plus errorifexists makes a same-millisecond collision between two
-    * instances fail loudly instead of silently overwriting the other
-    * writer's uncommitted segment.
+    * name must be unique across store INSTANCES and JVMs (concurrent
+    * writers share the root): a random suffix plus errorifexists makes
+    * a same-millisecond collision between two instances fail loudly
+    * instead of silently overwriting the other writer's uncommitted
+    * segment.
     */
   private def writeSegment(df: DataFrame): String = {
     val rand = java.util.UUID.randomUUID().toString.substring(0, 8)
@@ -129,47 +149,137 @@ class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
     name
   }
 
-  /** Commit: retain the snapshot as a numbered manifest (time travel),
-    * advance the main-head pointer chain (so concurrent/atomic writers
-    * know main's own lineage — see [[appendAtomic]]), then atomically
-    * replace CURRENT; prune segments referenced by NO retained manifest
-    * (best-effort — a failed prune leaks space, never data). With full
-    * history retained nothing prunes until [[expireSnapshots]] drops
-    * old manifests.
+  // ----- named refs: CAS-versioned pointer chains
+  //
+  // A ref pointer (main head or branch) is a CAS-VERSIONED CHAIN of
+  // immutable files `<prefix><K>` (content: the snapshot version the
+  // ref points at), each created with the same `link(2)` claim as the
+  // manifest log — atomic, exclusive, complete-on-arrival. The live
+  // pointer is the highest generation K. Advancing the pointer is
+  // therefore itself a CAS (claim generation K+1; EEXIST means another
+  // writer advanced first — re-read and retry), which makes ref
+  // writes safe across PROCESSES, not just threads: no REPLACE_EXISTING
+  // move ever touches a pointer, so two writers can never both "win"
+  // one generation. Generations are never deleted (tiny files), so the
+  // chain is monotone and ABA-free. Main's own lineage uses the same
+  // machinery under the `MAINHEAD.g` prefix — Iceberg models `main` as
+  // just another ref for the same reason. A ref is named here by
+  // `Option[String]`: None is main, Some(name) is branch `name`.
+
+  private def prefixOf(ref: Option[String]): String =
+    ref.fold("MAINHEAD.g")(name => s"BRANCH.$name.g")
+
+  /** Highest committed pointer generation under `prefix`, if any. */
+  private def latestGen(prefix: String): Option[Long] =
+    Option(root.list()).getOrElse(Array.empty)
+      .collect { case s if s.startsWith(prefix) => s.substring(prefix.length) }
+      .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
+      .maxOption
+
+  private def genFile(prefix: String, gen: Long) =
+    new File(root, s"$prefix$gen")
+
+  /** Snapshot version pointer generation `gen` of `prefix` points at. */
+  private def readPointer(prefix: String, gen: Long): Long =
+    readLines(genFile(prefix, gen)).head.toLong
+
+  /** The ref's latest pointer generation K and the version K points at.
+    * Main without a generation (an empty store, or one written before
+    * the pointer chain existed or by an external tool) falls back to
+    * (0, highest committed version); a branch without one does not
+    * exist.
     */
-  private def commit(segs: Seq[String]): Unit = {
-    root.mkdirs()
-    val v = versions().lastOption.getOrElse(0L) + 1
-    // numbered manifests get the same temp-file + atomic-move commit as
-    // CURRENT: a crash mid-write must never leave a truncated
-    // MANIFEST.vN that readAt(v)/versions()/referenced() would treat as
-    // a valid (partial) snapshot
-    writeAtomic(manifestFile(v), segs)
-    advanceMainHead(v)
-    writeAtomic(currentFile, segs)
-    prune()
+  private def refHead(ref: Option[String]): (Long, Long) = {
+    val prefix = prefixOf(ref)
+    (latestGen(prefix), ref) match {
+      case (Some(gen), _) => (gen, readPointer(prefix, gen))
+      case (None, None) => (0L, versions().lastOption.getOrElse(0L))
+      case (None, Some(name)) => sys.error(s"store at $path has no branch $name")
+    }
   }
 
-  private def writeAtomic(dst: File, segs: Seq[String]): Unit = {
-    val tmp = new File(root, s"${dst.getName}.tmp.${seq.incrementAndGet()}")
-    Files.write(tmp.toPath, segs.mkString("\n").getBytes(UTF_8))
-    Files.move(tmp.toPath, dst.toPath,
+  /** The one commit loop, for every write on main (`ref` None) or on a
+    * branch:
+    *  1. read the ref's head: pointer generation K → version `base`;
+    *  2. claim `MANIFEST.v(last+1)` of the shared version log with
+    *     `next(base)`'s segment list;
+    *  3. claim pointer generation K+1 pointing at that version.
+    * A lost claim at step 2 means another writer took the version
+    * number; at step 3 that another writer on the same ref moved the
+    * head since step 1, so our manifest was built from a STALE lineage
+    * and must not become the head — it stays in the log as an orphaned
+    * (but valid, segment-retaining) snapshot. Either way the loop
+    * re-reads the head and calls `next` again, so a derived write
+    * (upsert, delete, compact) rebuilds its segment from the fresh base
+    * instead of dropping the winner's rows; the losing segment is an
+    * orphan that prune's grace window reclaims. Basing on the REF's
+    * head, not on `versions().last`, matters because the version log is
+    * shared with other refs: the highest version may be a branch's head,
+    * and basing on it would graft the branch's rows into main.
+    * Monotonicity needs no explicit guard: a winning commit's version
+    * exceeds every version in the log, including the base it read.
+    *
+    * A main commit then rewrites CURRENT ([[publish]]) and prunes;
+    * CURRENT stays untouched by branch commits until [[fastForward]].
+    */
+  private def commitOn(ref: Option[String], maxRetries: Int = 50)(
+      next: Long => Seq[String]): Unit = {
+    root.mkdirs()
+    var attempt = 0
+    var committed = false
+    while (!committed) {
+      val (gen, base) = refHead(ref)
+      val segs = next(base)
+      val v = versions().lastOption.getOrElse(0L) + 1
+      committed = claim(manifestFile(v), segs.mkString("\n")) &&
+        claim(genFile(prefixOf(ref), gen + 1), v.toString)
+      if (!committed) {
+        attempt += 1
+        require(attempt <= maxRetries,
+          s"store at $path: CAS commit lost $maxRetries version races")
+      }
+    }
+    if (ref.isEmpty) {
+      publish()
+      prune()
+    }
+  }
+
+  /** Point the ref under `prefix` at `v` unconditionally: claim the
+    * next generation, retrying past concurrent claimers. A move may
+    * deliberately go backward (a branch reset) or sideways (a
+    * fast-forward of main to a branch's version); it still claims a
+    * fresh generation, so it serializes with concurrent commits
+    * instead of clobbering them.
+    */
+  private def movePointer(prefix: String, v: Long): Unit =
+    while (!claim(genFile(prefix, latestGen(prefix).getOrElse(0L) + 1), v.toString)) ()
+
+  /** Rewrite CURRENT as a copy of main's head manifest — a BEST-EFFORT
+    * CACHE for external tools ([[read]] resolves the head chain, see
+    * [[liveSegments]]). Temp file plus ATOMIC_MOVE, under a per-path
+    * JVM lock, re-resolving the head inside it, so threads of one JVM
+    * never leave CURRENT behind the head; across OS processes the last
+    * rewriter can still be stale.
+    */
+  private def publish(): Unit = DatasetStore.pathLock(path).synchronized {
+    val tmp = new File(root, s"CURRENT.tmp.${java.util.UUID.randomUUID()}")
+    Files.write(tmp.toPath, readManifest(headVersion()).mkString("\n").getBytes(UTF_8))
+    Files.move(tmp.toPath, currentFile.toPath,
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
   private def referenced(): Set[String] =
-    (versions().flatMap { v =>
-      new String(Files.readAllBytes(manifestFile(v).toPath), UTF_8)
-        .split('\n').map(_.trim).filter(_.nonEmpty)
-    } ++ (if (currentFile.exists) segments() else Nil)).toSet
+    (versions().flatMap(v => readLines(manifestFile(v))) ++
+      (if (currentFile.exists) segments() else Nil)).toSet
 
   /** Deletes every `seg_*` directory no retained manifest references.
-    * SINGLE-WRITER assumption (documented contract, same as the class):
-    * a concurrently-written segment whose commit hasn't landed yet
-    * would look orphaned and be destroyed by another commit's prune.
     * Segments younger than a grace window are kept (Iceberg-style
-    * orphan-file retention) so an in-flight writeSegment on the same
-    * path survives an overlapping prune even if the contract is bent.
+    * orphan-file retention): a concurrent writer's segment that is
+    * written but not yet committed looks orphaned, and the window keeps
+    * it alive until its commit lands. Best-effort: a failed or raced
+    * delete leaks space, but never fails a write that has already
+    * committed.
     */
   private def prune(graceMs: Long = 600000L): Unit = {
     val live = referenced()
@@ -178,11 +288,8 @@ class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
       .filter(_.startsWith("seg_")).filterNot(live)
       .filter(s => new File(root, s).lastModified() < cutoff)
       .foreach { s =>
-        def rmTree(f: File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rmTree))
-          f.delete()
-        }
-        rmTree(new File(root, s))
+        try Scratch.delete(new File(root, s).toString)
+        catch { case NonFatal(_) => () }
       }
   }
 
@@ -199,9 +306,8 @@ class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
     * needed).
     */
   private def refProtectedVersions(): Set[Long] = {
-    val branchVs = branchNames().map(branchVersion)
-    val mainV = latestGen(MainHeadPrefix).map(g => readPointer(MainHeadPrefix, g))
-    (branchVs ++ mainV).toSet
+    val main = prefixOf(None)
+    (branchNames().map(branchVersion) ++ latestGen(main).map(readPointer(main, _))).toSet
   }
 
   /** Branch names with at least one committed pointer generation. */
@@ -211,26 +317,19 @@ class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
       .collect { case Gen(name, _) => name }.distinct.toSeq
   }
 
-  /** Drop all but the newest `keep` snapshot manifests — EXCEPT any
-    * version a live ref (branch pointer or main head) still points at —
-    * then prune newly-unreferenced segments. The storage/time-travel
-    * trade-off knob (Delta's VACUUM / Iceberg's expire_snapshots).
+  /** [[vacuum]] with the default orphan-retention window — the
+    * storage/time-travel trade-off knob (Delta's VACUUM / Iceberg's
+    * expire_snapshots).
     */
-  def expireSnapshots(keep: Int): Unit = {
-    val protectedVs = refProtectedVersions()
-    versions().dropRight(keep).filterNot(protectedVs)
-      .foreach(v => manifestFile(v).delete())
-    prune()
-  }
+  def expireSnapshots(keep: Int): Unit = vacuum(keep)
 
-  /** VACUUM — expireSnapshots with an explicit orphan-retention
-    * window: drop all but the newest `keep` manifests (never a
+  /** VACUUM: drop all but the newest `keep` manifests (never a
     * ref-protected one — see [[refProtectedVersions]]) and delete
     * every segment no retained manifest references, keeping segments
     * younger than `graceMs`. `graceMs = 0` reclaims immediately and is
-    * only safe under the class's single-writer contract (a concurrent
-    * writer's uncommitted segment would look orphaned); production
-    * callers keep the default grace.
+    * the store's one single-writer operation (a concurrent writer's
+    * uncommitted segment would look orphaned); production callers keep
+    * the default grace.
     *
     * READER CONTRACT (proven by StoreMultiProcessSpec's pinned-reader
     * race): a reader that resolved `readAt(v)` while v was retained may
@@ -256,109 +355,60 @@ class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
   /** Whether a committed snapshot exists (CURRENT manifest present). */
   def isInitialized: Boolean = currentFile.exists
 
-  def init(df: DataFrame): Unit = commit(Seq(writeSegment(df)))
-
-  /** Append = a new segment joins the manifest; existing segments are
-    * untouched (no rewrite, no mutation of a live snapshot).
-    */
-  def append(df: DataFrame): Unit = {
+  /** Commit `df` as main's whole snapshot (replacing any earlier one). */
+  def init(df: DataFrame): Unit = {
     val seg = writeSegment(df)
-    commit(segments() :+ seg)
+    commitOn(None)(_ => Seq(seg))
   }
 
-  /** Segment list of a committed snapshot manifest. */
-  private def readManifest(v: Long): Seq[String] =
-    new String(Files.readAllBytes(manifestFile(v).toPath), UTF_8)
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
+  /** Append `df` as a new segment of main's head; on an empty store
+    * the first append initializes it. The same commit as
+    * [[appendAtomic]], so it is safe with concurrent writers.
+    */
+  def append(df: DataFrame): Unit = appendAtomic(df)
 
-  /** CONCURRENT append with optimistic concurrency: the manifest-CAS
-    * protocol Delta/Iceberg run against an object store's putIfAbsent,
-    * here on POSIX `link(2)` via `Files.createLink` — the ONE local-FS
-    * primitive that is simultaneously atomic, exclusive (EEXIST if the
-    * name is taken; it never replaces) and content-complete (the link
-    * target is a fully-written temp file, so a manifest either does
-    * not exist or is whole — no reader can observe a partial or empty
-    * snapshot). NB `Files.move` without REPLACE_EXISTING is NOT a CAS:
-    * the JDK implements it as an existence check plus rename(2), which
-    * silently replaces — two racers can both "win" and one commit is
-    * lost (observed in the 8-writer race spec before this landed on
-    * createLink). Losers re-read main's head and retry against the
-    * next version; blind retry is CORRECT for appends because appends
-    * commute (upsert/delete recompute state and keep the documented
-    * single-writer contract).
-    *
-    * LINEAGE: the new manifest is built from the MAIN-HEAD pointer's
-    * snapshot, NOT from `versions().last` — the version log is shared
-    * with branch writers ([[appendBranch]]), so the highest committed
-    * version may be a branch's head, and basing on it would graft the
-    * branch's rows into main. The same two-level CAS as appendBranch
-    * guards the read: (1) read the main-head pointer (generation K →
-    * version mv); (2) CAS the new manifest into the shared log;
-    * (3) CAS the pointer to generation K+1. EEXIST at step 3 means
-    * another main writer advanced between 1 and 3 — our manifest was
-    * built from a stale lineage and must not become the head; it stays
-    * in the log as an orphaned (but valid, segment-retaining) snapshot
-    * and the loop rebuilds. CURRENT is then rewritten (under a per-path
-    * JVM lock, re-resolving the head inside it) as a BEST-EFFORT CACHE
-    * for external tools — across separate OS processes the last
-    * rewriter can be stale, which is why [[read]] resolves through the
-    * head chain (monotone by construction: generations are exclusive
-    * links, never rewritten) rather than trusting CURRENT; every
-    * pointer and manifest file is complete-on-arrival.
+  /** Append = a new segment joins main's head snapshot; existing
+    * segments are untouched (no rewrite, no mutation of a live
+    * snapshot). Safe with concurrent writers (threads or processes,
+    * see [[commitOn]]); appends commute, so a lost race only re-reads
+    * the head. On an empty store the first append initializes it.
     */
   def appendAtomic(df: DataFrame, maxRetries: Int = 50): Unit = {
-    root.mkdirs()
     val seg = writeSegment(df)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val gen = latestGen(MainHeadPrefix).getOrElse(0L)
-      // gen == 0: store predates the pointer chain (or is empty) — fall
-      // back to the highest committed version as main's lineage
-      val mv = if (gen == 0) versions().lastOption.getOrElse(0L)
-               else readPointer(MainHeadPrefix, gen)
-      val v = versions().lastOption.getOrElse(0L)
-      val segs = (if (mv == 0) Nil else readManifest(mv)) :+ seg
-      val tmp = new File(root, s"MANIFEST.tmp.${seq.incrementAndGet()}.${Thread.currentThread().getId}")
-      Files.write(tmp.toPath, segs.mkString("\n").getBytes(UTF_8))
-      val manifestLanded =
-        try {
-          Files.createLink(manifestFile(v + 1).toPath, tmp.toPath)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        } finally Files.deleteIfExists(tmp.toPath)
-      if (manifestLanded && casPointer(MainHeadPrefix, gen + 1, v + 1)) committed = true
-      else {
-        attempt += 1
-        require(attempt <= maxRetries,
-          s"store at $path: CAS append lost $maxRetries version races")
-      }
-    }
-    DatasetStore.pathLock(path).synchronized {
-      writeAtomic(currentFile, readManifest(mainHeadVersion()))
-    }
-    prune()
+    commitOn(None, maxRetries)(base => (if (base == 0) Nil else readManifest(base)) :+ seg)
   }
 
-  /** MERGE: rows in `updates` replace current rows with the same key;
-    * new keys are inserted. Current-side is anti-joined on the update
-    * keys (a broadcast anti-join when updates are small — the common
-    * CRUD case), then unioned with the updates.
+  /** Main's rows at commit base `base`, the input of a derived write;
+    * an empty store has nothing to derive from.
     */
-  def upsert(updates: DataFrame): Unit = {
-    val merged = read().join(
-        broadcast(updates.select(col(keyCol))), Seq(keyCol), "left_anti")
-      .unionByName(updates)
-    commit(Seq(writeSegment(merged)))
+  private def baseRows(base: Long): DataFrame = {
+    require(base > 0, s"store at $path not initialized")
+    readAt(base)
   }
+
+  /** `current` with every row whose key is in `updates` replaced by
+    * the update; new keys insert. A broadcast anti-join when updates
+    * are small — the common CRUD case — then a union.
+    */
+  private def merge(current: DataFrame, updates: DataFrame): DataFrame =
+    current.join(broadcast(updates.select(col(keyCol))), Seq(keyCol), "left_anti")
+      .unionByName(updates)
+
+  /** MERGE: rows in `updates` replace current rows with the same key;
+    * new keys are inserted. The merged segment is DERIVED from the head
+    * it read, so a commit that loses a race rebuilds it from the fresh
+    * head (see [[commitOn]]) — concurrent appends are never dropped.
+    */
+  def upsert(updates: DataFrame): Unit =
+    commitOn(None)(base => Seq(writeSegment(merge(baseRows(base), updates))))
 
   /** DELETE WHERE: keep rows where the predicate is false OR null —
     * SQL DELETE semantics (a NULL predicate does not delete the row;
     * a bare `!predicate` filter would silently drop it).
     */
   def delete(predicate: Column): Unit =
-    commit(Seq(writeSegment(read().filter(not(coalesce(predicate, lit(false)))))))
+    commitOn(None)(base =>
+      Seq(writeSegment(baseRows(base).filter(not(coalesce(predicate, lit(false)))))))
 
   /** Live segment count — the small-files health metric COMPACT fixes. */
   def segmentCount: Int = segments().size
@@ -371,229 +421,68 @@ class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
     * manifests. At 100 TB this runs per partition/size-bucket rather
     * than whole-table; the commit protocol is the same.
     */
-  def compact(): Unit = commit(Seq(writeSegment(read())))
+  def compact(): Unit = commitOn(None)(base => Seq(writeSegment(baseRows(base))))
 
-  // ----- named refs: CAS-versioned pointer chains
-  //
-  // A ref pointer (main head or branch) is a CAS-VERSIONED CHAIN of
-  // immutable files `<prefix><K>` (content: the snapshot version the
-  // ref points at), each created with the same `link(2)` CAS as the
-  // manifest log — atomic, exclusive, complete-on-arrival. The live
-  // pointer is the highest generation K. Advancing the pointer is
-  // therefore itself a CAS (claim generation K+1; EEXIST means another
-  // writer advanced first — re-read and retry), which makes ref
-  // writes safe across PROCESSES, not just threads: no REPLACE_EXISTING
-  // move ever touches a pointer, so two writers can never both "win"
-  // one generation. Generations are never deleted (tiny files), so the
-  // chain is monotone and ABA-free. Main's own lineage uses the same
-  // machinery under the `MAINHEAD.g` prefix — Iceberg models `main` as
-  // just another ref for the same reason.
-
-  private val MainHeadPrefix = "MAINHEAD.g"
-
-  private def branchGenPrefix(name: String) = s"BRANCH.$name.g"
-
-  /** Highest committed pointer generation under `prefix`, if any. */
-  private def latestGen(prefix: String): Option[Long] =
-    Option(root.list()).getOrElse(Array.empty)
-      .collect { case s if s.startsWith(prefix) => s.substring(prefix.length) }
-      .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      .maxOption
-
-  private def genFile(prefix: String, gen: Long) =
-    new File(root, s"$prefix$gen")
-
-  /** Snapshot version pointer generation `gen` of `prefix` points at. */
-  private def readPointer(prefix: String, gen: Long): Long =
-    new String(Files.readAllBytes(genFile(prefix, gen).toPath), UTF_8).trim.toLong
-
-  /** Claim pointer generation `gen` under `prefix` with content `v` via
-    * link(2); false if another writer claimed it first.
+  /** Snapshot version main currently ends at: the main-head pointer if
+    * one exists, else the highest committed version (see [[refHead]]).
+    * Public so callers can pin a release version for later [[readAt]] —
+    * e.g. incremental dedup against a prior corpus release.
     */
-  private def casPointer(prefix: String, gen: Long, v: Long): Boolean = {
-    val tmp = new File(root, s"$prefix.tmp.${seq.incrementAndGet()}.${Thread.currentThread().getId}")
-    Files.write(tmp.toPath, v.toString.getBytes(UTF_8))
-    try {
-      Files.createLink(genFile(prefix, gen).toPath, tmp.toPath)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally Files.deleteIfExists(tmp.toPath)
-  }
-
-  /** Set the main-head pointer to `v` unconditionally (claim the next
-    * generation, retrying past concurrent claimers). Used by the
-    * single-writer commit path and by [[fastForward]] (which may
-    * deliberately move the head to a branch's version); the concurrent
-    * [[appendAtomic]] path instead CASes a specific generation so a
-    * stale lineage read can never become the head.
-    */
-  private def advanceMainHead(v: Long): Unit = {
-    var done = false
-    while (!done) {
-      val gen = latestGen(MainHeadPrefix).getOrElse(0L)
-      done = casPointer(MainHeadPrefix, gen + 1, v)
-    }
-  }
-
-  /** Version main's lineage currently ends at: the main-head pointer if
-    * one exists, else the highest committed version (a store written
-    * before the pointer chain existed, or by an external tool).
-    */
-  private def mainHeadVersion(): Long =
-    latestGen(MainHeadPrefix).map(readPointer(MainHeadPrefix, _))
-      .orElse(versions().lastOption).getOrElse(0L)
-
-  /** Snapshot version main currently ends at (what [[read]] resolves
-    * through CURRENT). Public so callers can pin a release version for
-    * later [[readAt]] — e.g. incremental dedup against a prior corpus
-    * release.
-    */
-  def headVersion(): Long = mainHeadVersion()
-
-  private def latestBranchGen(name: String): Option[Long] =
-    latestGen(branchGenPrefix(name))
-
-  private def branchGenFile(name: String, gen: Long) =
-    genFile(branchGenPrefix(name), gen)
-
-  private def casBranchPointer(name: String, gen: Long, v: Long): Boolean =
-    casPointer(branchGenPrefix(name), gen, v)
+  def headVersion(): Long = refHead(None)._2
 
   /** Create/reset branch `name` pointing at snapshot `fromVersion`.
     * A branch is a named pointer into the SAME immutable version log
-    * CURRENT reads from — zero data copied (Iceberg/Delta branch
+    * main reads from — zero data copied (Iceberg/Delta branch
     * semantics; possible only because segments and manifests are
-    * immutable). A reset may deliberately move the branch backward;
-    * it still claims the next pointer generation, so it serializes
-    * with concurrent appenders instead of clobbering them.
+    * immutable). A reset may deliberately move the branch backward.
     */
   def createBranch(name: String, fromVersion: Long): Unit = {
     require(manifestFile(fromVersion).exists,
       s"store at $path has no snapshot v$fromVersion")
-    var done = false
-    while (!done) {
-      val gen = latestBranchGen(name).getOrElse(0L)
-      done = casBranchPointer(name, gen + 1, fromVersion)
-    }
+    movePointer(prefixOf(Some(name)), fromVersion)
   }
 
-  def branchVersion(name: String): Long = {
-    val gen = latestBranchGen(name)
-      .getOrElse(sys.error(s"store at $path has no branch $name"))
-    new String(Files.readAllBytes(branchGenFile(name, gen).toPath), UTF_8).trim.toLong
-  }
+  def branchVersion(name: String): Long = refHead(Some(name))._2
 
   def readBranch(name: String): DataFrame = readAt(branchVersion(name))
 
-  /** Append onto a BRANCH head: the new manifest still CASes into the
-    * shared version log (so main and branch writers never collide on a
-    * version number), but only the branch pointer advances — CURRENT
-    * is untouched until [[fastForward]].
+  /** Append onto a BRANCH head: the new manifest still claims a number
+    * in the shared version log (so main and branch writers never
+    * collide on a version number), but only the branch pointer
+    * advances — CURRENT is untouched until [[fastForward]].
     */
   def appendBranch(name: String, df: DataFrame, maxRetries: Int = 50): Unit = {
     val seg = writeSegment(df)
-    var attempt = 0
-    var committed = false
-    // Two-level CAS, no lock — correct across threads AND processes:
-    //  1. read the pointer (generation K → branch version bv);
-    //  2. CAS the new manifest into the shared version log (unique
-    //     version number; loser re-reads and retries);
-    //  3. CAS the pointer to generation K+1 referencing the committed
-    //     version. EEXIST here means another branch writer advanced the
-    //     pointer between 1 and 3 — our manifest was built from a STALE
-    //     lineage and must not become the branch head; it stays in the
-    //     log as an orphaned (but fully valid, segment-retaining)
-    //     snapshot and the loop rebuilds from the new pointer. The
-    //     pointer CAS at K+1 is what the old lock used to guarantee:
-    //     the advance is atomic with the read that seeded the manifest,
-    //     so a lost update is structurally impossible.
-    // Monotonicity needs no explicit guard: a winning append's version
-    // v+1 exceeds every version in the log, including the bv it read.
-    while (!committed) {
-      val gen = latestBranchGen(name)
-        .getOrElse(sys.error(s"store at $path has no branch $name"))
-      val bv = new String(
-        Files.readAllBytes(branchGenFile(name, gen).toPath), UTF_8).trim.toLong
-      val v = versions().lastOption.getOrElse(0L)
-      val segs = readManifest(bv) :+ seg
-      val tmp = new File(root, s"MANIFEST.tmp.${seq.incrementAndGet()}.${Thread.currentThread().getId}")
-      Files.write(tmp.toPath, segs.mkString("\n").getBytes(UTF_8))
-      val manifestLanded =
-        try {
-          Files.createLink(manifestFile(v + 1).toPath, tmp.toPath)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        } finally Files.deleteIfExists(tmp.toPath)
-      if (manifestLanded && casBranchPointer(name, gen + 1, v + 1)) committed = true
-      else {
-        attempt += 1
-        require(attempt <= maxRetries,
-          s"store at $path: branch CAS lost $maxRetries races")
-      }
-    }
+    commitOn(Some(name), maxRetries)(base => readManifest(base) :+ seg)
   }
 
   /** MERGE onto a BRANCH head — the branch-side [[upsert]] a
     * three-way branch-merge workflow needs: rows in `updates` replace
-    * same-key rows in the branch snapshot, new keys insert. Same
-    * two-level CAS as [[appendBranch]], with one structural
-    * difference: the merged segment is DERIVED from the snapshot it
-    * read (not an independent delta), so a lost pointer race must
-    * REBUILD the segment from the fresh branch version — re-linking
-    * the stale segment would silently drop the winner's rows.
+    * same-key rows in the branch snapshot, new keys insert. Like
+    * [[upsert]], a lost race rebuilds the merged segment from the fresh
+    * branch version — re-linking the stale segment would silently drop
+    * the winner's rows.
     */
-  def upsertBranch(name: String, updates: DataFrame, maxRetries: Int = 50): Unit = {
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val gen = latestBranchGen(name)
-        .getOrElse(sys.error(s"store at $path has no branch $name"))
-      val bv = new String(
-        Files.readAllBytes(branchGenFile(name, gen).toPath), UTF_8).trim.toLong
-      val merged = readAt(bv).join(
-          broadcast(updates.select(col(keyCol))), Seq(keyCol), "left_anti")
-        .unionByName(updates)
-      val seg = writeSegment(merged)
-      val v = versions().lastOption.getOrElse(0L)
-      val tmp = new File(root, s"MANIFEST.tmp.${seq.incrementAndGet()}.${Thread.currentThread().getId}")
-      Files.write(tmp.toPath, seg.getBytes(UTF_8))
-      val manifestLanded =
-        try {
-          Files.createLink(manifestFile(v + 1).toPath, tmp.toPath)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        } finally Files.deleteIfExists(tmp.toPath)
-      if (manifestLanded && casBranchPointer(name, gen + 1, v + 1)) committed = true
-      else {
-        attempt += 1
-        require(attempt <= maxRetries,
-          s"store at $path: branch merge CAS lost $maxRetries races")
-      }
-    }
-  }
+  def upsertBranch(name: String, updates: DataFrame, maxRetries: Int = 50): Unit =
+    commitOn(Some(name), maxRetries)(base => Seq(writeSegment(merge(readAt(base), updates))))
 
-  /** Fast-forward CURRENT to the branch head (publish the branch).
-    * Also advances the main-head pointer: main's lineage now ends at
-    * the branch's version, and subsequent [[appendAtomic]] calls must
-    * build on it — leaving the pointer behind would make the next
-    * atomic append silently undo the publish.
+  /** Fast-forward main to the branch head (publish the branch): moves
+    * the main-head pointer, so main's lineage now ends at the branch's
+    * version and later commits build on it — leaving the pointer
+    * behind would make the next append silently undo the publish —
+    * then rewrites CURRENT.
     */
-  def fastForward(name: String): Unit =
-    DatasetStore.pathLock(path).synchronized {
-      val bv = branchVersion(name)
-      advanceMainHead(bv)
-      writeAtomic(currentFile, readManifest(bv))
-    }
+  def fastForward(name: String): Unit = {
+    movePointer(prefixOf(None), branchVersion(name))
+    publish()
+  }
 
   /** RESTORE: re-commit an earlier snapshot's manifest as a NEW
     * version (git-revert / Delta RESTORE semantics) — history is
     * never rewritten, the reverted-away versions stay inspectable,
     * and no data moves (segments are immutable and shared).
     */
-  def rollback(v: Long): Unit = commit(readManifest(v))
+  def rollback(v: Long): Unit = commitOn(None)(_ => readManifest(v))
 
   /** CHANGE DATA FEED between two snapshots (Delta CDF semantics,
     * derived rather than logged — possible because every snapshot
@@ -645,10 +534,34 @@ class DatasetStore(spark: SparkSession, path: String, keyCol: String) {
 }
 
 object DatasetStore {
-  /** Per-path monitor for CURRENT-pointer advancement (JVM-local; see
-    * [[DatasetStore.appendAtomic]] for the cross-JVM story).
+  /** Per-path monitor for CURRENT rewrites (JVM-local; see
+    * [[DatasetStore.publish]] for the cross-JVM story).
     */
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[sources] def pathLock(path: String): Object =
     locks.computeIfAbsent(path, _ => new Object)
+
+  /** The one link(2) claim: create `dst` holding `content` unless a
+    * file of that name exists; false if another writer claimed it
+    * first. The content goes to a uniquely-named temp file first (a
+    * UUID, so writers in other processes never share it), so `dst` is
+    * whole on arrival.
+    */
+  private[sources] def claim(dst: File, content: String): Boolean = {
+    val tmp = new File(dst.getParentFile, s"${dst.getName}.tmp.${java.util.UUID.randomUUID()}")
+    Files.write(tmp.toPath, content.getBytes(UTF_8))
+    try {
+      Files.createLink(dst.toPath, tmp.toPath)
+      true
+    } catch {
+      case _: FileAlreadyExistsException => false
+    } finally Files.deleteIfExists(tmp.toPath)
+  }
+
+  /** The non-blank lines of a manifest, pointer or CURRENT file,
+    * trimmed: one segment or part name per line.
+    */
+  private[sources] def readLines(f: File): Seq[String] =
+    new String(Files.readAllBytes(f.toPath), UTF_8)
+      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
 }

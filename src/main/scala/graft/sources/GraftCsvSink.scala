@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -46,9 +46,7 @@ object GraftCsvSink {
       .filter(_.startsWith("MANIFEST."))
       .flatMap(n => n.stripPrefix("MANIFEST.").toLongOption.map(_ -> n))
     manifests.sortBy(_._1).lastOption.map { case (_, name) =>
-      new String(Files.readAllBytes(Paths.get(dir, name)), UTF_8)
-        .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-        .map(p => new File(d, p).toString)
+      DatasetStore.readLines(new File(d, name)).map(p => new File(d, p).toString)
     }.getOrElse(Seq.empty)
   }
 
@@ -111,20 +109,10 @@ private class GraftCsvBatchWrite(path: String, schema: StructType)
       Files.move(staged.toPath, new File(dir, fin).toPath)
       fin
     }
-    val tmp = new File(dir, s"MANIFEST.tmp.${java.util.UUID.randomUUID()}")
-    Files.write(tmp.toPath, parts.sorted.mkString("\n").getBytes(UTF_8))
+    val manifest = parts.sorted.mkString("\n")
     var n = Option(dir.list()).getOrElse(Array.empty)
       .flatMap(_.stripPrefix("MANIFEST.").toLongOption).maxOption.getOrElse(0L) + 1
-    var done = false
-    while (!done) {
-      try {
-        Files.createLink(new File(dir, s"MANIFEST.$n").toPath, tmp.toPath)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => n += 1
-      }
-    }
-    Files.deleteIfExists(tmp.toPath)
+    while (!DatasetStore.claim(new File(dir, s"MANIFEST.$n"), manifest)) n += 1
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

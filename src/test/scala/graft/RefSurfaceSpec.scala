@@ -222,6 +222,49 @@ class RefSurfaceSpec extends SparkSpec {
     assert(s1.read().collect().map(_.getLong(0)).toSeq == Seq(0L))
   }
 
+  // A derived write (upsert, delete, compact) builds its segment from the
+  // head it read; appends that commit while its Spark job runs must not
+  // be lost when it commits, and its own effect must still hold.
+  Seq("upsert", "delete", "compact").foreach { op =>
+    test(s"DatasetStore $op racing 4 appendAtomic writers: no append lost, the $op holds") {
+      import spark.implicits._
+      val path = Scratch.dir("graft_storespec_") + s"/race_$op"
+      val store = new graft.sources.DatasetStore(spark, path, "id")
+      val init = (0L until 10L).map(k => (k, 0.0))
+      store.init(init.toDF("id", "v"))
+      val initSeg = Files.readString(Paths.get(path, "CURRENT")).trim
+      val appended = for (w <- 1 to 4; i <- 0 until 6) yield (w * 100L + i, 1.0)
+      val writers = (1 to 4).map { w =>
+        new Thread(() => appended.filter(_._1 / 100 == w).foreach { row =>
+          store.appendAtomic(Seq(row).toDF("id", "v"))
+        })
+      }
+      writers.foreach(_.start())
+      (1 to 3).foreach { r =>
+        op match {
+          case "upsert" => store.upsert(Seq((r.toLong, r * 10.0)).toDF("id", "v"))
+          case "delete" => store.delete(col("id") === r + 5L)
+          case "compact" => store.compact()
+        }
+      }
+      writers.foreach(_.join())
+      val rows = store.read().collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+      appended.foreach { case (k, _) =>
+        assert(rows.count(_._1 == k) == 1, s"appended row $k is not in read() exactly once")
+      }
+      val expectedInit = op match {
+        case "upsert" => init.map { case (k, v) => if (k >= 1 && k <= 3) (k, k * 10.0) else (k, v) }
+        case "delete" => init.filterNot { case (k, _) => k >= 6 && k <= 8 }
+        case "compact" => init
+      }
+      assert(rows.sortBy(_._1) == (expectedInit ++ appended).sortBy(_._1), s"the $op's effect does not hold")
+      if (op == "compact") {
+        val head = Files.readAllLines(Paths.get(path, s"MANIFEST.v${store.headVersion()}"))
+        assert(!head.contains(initSeg), "compact left the init segment in the head snapshot")
+      }
+    }
+  }
+
   test("GraftCsvSink round-trips embedded newlines, quotes and commas") {
     import spark.implicits._
     val out = Scratch.dir("graft_csvsink_") + "/rt"

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM CRASH WRITER for [[StoreCrashSpec]]: appends one row per
   * commit (k = 1, 2, 3, …) and compacts every third commit, forever,
   * printing `commit <k>` after each successful commit — until the
@@ -15,13 +13,7 @@ import org.apache.spark.sql.SparkSession
 object StoreCrashChild {
   def main(args: Array[String]): Unit = {
     val Array(storeDir) = args.take(1)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-store-crash-writer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("2", "ERROR")
     import spark.implicits._
     val store = new graft.sources.DatasetStore(spark, storeDir, "k")
     var k = 1L

@@ -22,7 +22,7 @@ import graft.queries.Scratch
   *  - partial work is INVISIBLE to readers (readers resolve manifests;
   *    orphaned segments are never scanned);
   *  - every retained manifest stays exactly readable (no truncated
-  *    MANIFEST.vN — writeAtomic's temp-file + atomic-move);
+  *    MANIFEST.vN — a manifest is a link(2) of a whole temp file);
   *  - the next vacuum RECLAIMS orphaned segment dirs (Iceberg-style
   *    orphan-file cleanup), leaving disk == referenced set;
   *  - the store stays writable after recovery.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM worker for [[StoreMultiProcessSpec]]: a SEPARATE OS
   * process (its own SparkSession, its own DatasetStore instance, no
   * shared JVM locks) that interleaves `appendAtomic` onto main and
@@ -15,13 +13,7 @@ object StoreRaceChild {
     val Array(storeDir, writerIdS, nS) = args.take(3)
     val writerId = writerIdS.toLong
     val n = nS.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-store-race-w$writerIdS")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("2", "ERROR")
     import spark.implicits._
     val store = new graft.sources.DatasetStore(spark, storeDir, "k")
     var i = 0

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM PINNED READER for [[StoreMultiProcessSpec]]'s GC race:
   * resolves `readAt(vOld)` ONCE (while the manifest is still
   * retained), signals readiness, then re-executes the pinned
@@ -18,13 +16,7 @@ import org.apache.spark.sql.SparkSession
 object StoreReaderChild {
   def main(args: Array[String]): Unit = {
     val Array(storeDir, vS, millisS, readyPath) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-store-pinned-reader")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("2", "ERROR")
     val store = new graft.sources.DatasetStore(spark, storeDir, "k")
     // pin: one manifest resolution; the loop below never re-resolves
     val pinned = store.readAt(vS.toLong)
