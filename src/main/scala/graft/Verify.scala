@@ -33,15 +33,12 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
-    // defensive parse: a malformed value ("8 ", "auto") must degrade to
-    // the default, not NumberFormatException-abort the whole dump before
-    // any query runs (the r12 zero-correctness failure class)
-    val par = scala.util.Try(
-      // defensive parse (r13 ADVICE): a malformed value must not abort
-      // the whole correctness dump before any query runs
-      scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "8").trim.toInt)
-        .getOrElse(8).max(1)
-    ).getOrElse(8).max(1)
+    // defensive parse (r13 ADVICE): a malformed value ("auto") must
+    // degrade to the default, not NumberFormatException-abort the whole
+    // dump before any query runs (the r12 zero-correctness failure
+    // class); padding ("8 ") is trimmed, and 0 or less means 1
+    val par = scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "8").trim.toInt)
+      .getOrElse(8).max(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * corpus-independent key domain (`isBoundedDomain`).
   *
   * USE ONLY when the input is such an aggregate — the gate fails the
-  * plan sweep otherwise, by design. Results are bit-identical to the
+  * query's plan check otherwise, by design. Results are bit-identical to the
   * GlobalRank formulation for exact types and a tie-free order (both
   * compute the same unique global prefix).
   */
@@ -49,12 +49,8 @@ object BoundedPrefix {
       sortExprs: Seq[Column]): DataFrame =
     prefixSums(df, Seq((valueCol, sumCol)), sortExprs)
 
-  /** 1-based global row number over the bounded frame (tie-free order). */
-  def rowNumber(df: DataFrame, rnCol: String, sortExprs: Seq[Column]): DataFrame =
-    df.withColumn(rnCol,
-      row_number().over(Window.orderBy(sortExprs: _*)).cast("long"))
-
-  /** [[rowNumber]] plus the global row count as `totalCol` — same
+  /** 1-based global row number over the bounded frame (tie-free order)
+    * plus the global row count as `totalCol` — same
     * output as [[GlobalRank.withGlobalRowNumberAndTotal]]. The count
     * rides the same WindowExec (an unbounded-frame count over the
     * already-sorted single task), not a second aggregation pass.

@@ -589,8 +589,10 @@ object Extras3 {
     val activity = ev
       .select(col("user_id"), date_trunc("day", col("ts")).as("active_day"))
       .distinct()
+    // cohort_day leaves as its ISO date string (sorts like the date):
+    // a raw timestamp compares as datetime64[ns] vs DuckDB's [us]
     activity.join(firsts, "user_id")
-      .select(col("cohort_day"),
+      .select(col("cohort_day").cast("date").cast("string").as("cohort_day"),
         datediff(col("active_day"), col("cohort_day")).cast("bigint")
           .as("day_offset"))
       .groupBy("cohort_day", "day_offset")
@@ -604,7 +606,7 @@ object Extras3 {
       |activity AS (
       |  SELECT DISTINCT user_id, date_trunc('day', ts) AS active_day
       |  FROM events)
-      |SELECT cohort_day,
+      |SELECT CAST(CAST(cohort_day AS DATE) AS VARCHAR) AS cohort_day,
       |  CAST(date_diff('day', cohort_day, active_day) AS BIGINT) AS day_offset,
       |  count(*) AS n_active
       |FROM activity JOIN firsts USING (user_id)

@@ -9,8 +9,10 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.execution.{BaseSubqueryExec, CollectLimitExec, GlobalLimitExec, LocalLimitExec, TakeOrderedAndProjectExec}
 
-/** Fleet-wide plan-invariant gate (r8 verdict task #1): every
-  * registered query's PHYSICAL plan is machine-checked for
+/** The one sweep of the whole registry: one test per registered
+  * query builds it once at sf0.001, machine-checks its PHYSICAL plan
+  * (the fleet-wide plan-invariant gate, r8 verdict task #1), then asserts
+  * that it has columns and returns rows. The plan check looks for
   * the three patterns that sink a 100 TB run —
   *
   *  1. `CartesianProductExec` — a true cartesian product. Never
@@ -45,7 +47,9 @@ import org.apache.spark.sql.execution.{BaseSubqueryExec, CollectLimitExec, Globa
   * This converts the 173 benign-but-hand-audited `WindowExec: No
   * Partition Defined` warnings from "audited in rounds 3–8" into a
   * regression gate: the 508th row cannot silently introduce a global
-  * sort-the-corpus window or an n² join.
+  * sort-the-corpus window or an n² join. A failing query fails its own
+  * test, named after it. A last test asserts that every whitelist entry
+  * is still used by its query's plan.
   */
 class PlanInvariantSpec extends SparkSpec {
 
@@ -120,64 +124,8 @@ class PlanInvariantSpec extends SparkSpec {
     }
   }
 
-  test("all registered query plans: no cartesian product, no unlisted nested-loop join, no unbounded global window") {
-    val violations = collection.mutable.ArrayBuffer[String]()
-    val usedBnlj = collection.mutable.Set[String]()
-    val usedGw = collection.mutable.Set[String]()
-    var checked = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan =
-        try fn(spark, sf).queryExecution.executedPlan
-        catch {
-          case e: Throwable =>
-            violations += s"$name: plan construction failed: ${e.getMessage}"
-            null
-        }
-      if (plan != null) {
-        checked += 1
-        val nodes = allNodes(plan)
-        val aliases = aliasMap(nodes)
-        nodes.foreach {
-          case _: CartesianProductExec =>
-            violations += s"$name: CartesianProductExec (never allowed)"
-          case j: BroadcastNestedLoopJoinExec =>
-            val broadcastSide = j.buildSide match {
-              case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
-              case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
-            }
-            val scalarBroadcast = broadcastSide.exists {
-              case a: BaseAggregateExec => a.groupingExpressions.isEmpty // exactly 1 row
-              case _: GlobalLimitExec | _: LocalLimitExec => true
-              case _: CollectLimitExec | _: TakeOrderedAndProjectExec => true
-              case _ => false
-            }
-            if (!scalarBroadcast) {
-              if (bnljWhitelist.contains(name)) usedBnlj += name
-              else violations += s"$name: unlisted BroadcastNestedLoopJoinExec (${j.joinType}) with non-scalar broadcast side"
-            }
-          case w: WindowExec if w.partitionSpec.isEmpty =>
-            if (!hasBoundingNodeBelow(w.child, aliases)) {
-              if (globalWindowWhitelist.contains(name)) usedGw += name
-              else violations += s"$name: empty-partition WindowExec without a provably bounded frame below"
-            }
-          case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
-            if (!hasBoundingNodeBelow(w.child, aliases)) {
-              if (globalWindowWhitelist.contains(name)) usedGw += name
-              else violations += s"$name: empty-partition WindowGroupLimitExec without a provably bounded frame below"
-            }
-          case _ => ()
-        }
-      }
-    }
-    info(s"checked $checked plans; BNLJ whitelist used: ${usedBnlj.size}/${bnljWhitelist.size}; " +
-      s"global-window whitelist used: ${usedGw.size}/${globalWindowWhitelist.size}")
-    // the whitelist must not rot: every entry must still be needed
-    val staleBnlj = bnljWhitelist.keySet -- usedBnlj
-    val staleGw = globalWindowWhitelist.keySet -- usedGw
-    assert(staleBnlj.isEmpty, s"stale BNLJ whitelist entries (no longer in plan): $staleBnlj")
-    assert(staleGw.isEmpty, s"stale global-window whitelist entries: $staleGw")
-    assert(violations.isEmpty,
-      s"${violations.size} plan-invariant violations:\n  ${violations.mkString("\n  ")}")
+  test("entry returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
   }
 
   /** The r11 verdict's gate gap, pinned as a unit contract: the old
@@ -221,6 +169,79 @@ class PlanInvariantSpec extends SparkSpec {
       .groupBy("k").agg(count(lit(1)).as("c"))
       .withColumn("cum", sum(col("c")).over(w))
     assert(!windowPasses(corpusGrid), "corpus-derived explode must be flagged")
+  }
+
+  /** The child of an empty-partition `WindowExec` or
+    * `WindowGroupLimitExec`: a single-task window over that child. */
+  private object GlobalWindow {
+    def unapply(p: SparkPlan): Option[SparkPlan] = p match {
+      case w: WindowExec if w.partitionSpec.isEmpty => Some(w.child)
+      case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => Some(w.child)
+      case _ => None
+    }
+  }
+
+  // Filled by the per-query tests, read by the rot check registered
+  // after them: the whitelist entries some plan needed, and the queries
+  // whose test ran to the end.
+  private val usedBnlj = collection.mutable.Set[String]()
+  private val usedGw = collection.mutable.Set[String]()
+  private val passed = collection.mutable.Set[String]()
+  private var checked = 0
+
+  /** The three rules over one query's plan. Records every whitelist
+    * entry the plan uses; returns the violations. */
+  private def violations(name: String, plan: SparkPlan): Seq[String] = {
+    val nodes = allNodes(plan)
+    val aliases = aliasMap(nodes)
+    nodes.flatMap {
+      case _: CartesianProductExec =>
+        Some(s"$name: CartesianProductExec (never allowed)")
+      case j: BroadcastNestedLoopJoinExec =>
+        val broadcastSide = j.buildSide match {
+          case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+          case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
+        }
+        val scalarBroadcast = broadcastSide.exists {
+          case a: BaseAggregateExec => a.groupingExpressions.isEmpty // exactly 1 row
+          case _: GlobalLimitExec | _: LocalLimitExec => true
+          case _: CollectLimitExec | _: TakeOrderedAndProjectExec => true
+          case _ => false
+        }
+        if (scalarBroadcast) None
+        else if (bnljWhitelist.contains(name)) { usedBnlj += name; None }
+        else Some(s"$name: unlisted BroadcastNestedLoopJoinExec (${j.joinType}) with non-scalar broadcast side")
+      case w @ GlobalWindow(child) if !hasBoundingNodeBelow(child, aliases) =>
+        if (globalWindowWhitelist.contains(name)) { usedGw += name; None }
+        else Some(s"$name: empty-partition ${w.getClass.getSimpleName} without a provably bounded frame below")
+      case _ => None
+    }
+  }
+
+  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    test(s"$name runs and returns rows") {
+      val df = fn(spark, sf)
+      val v = violations(name, df.queryExecution.executedPlan)
+      checked += 1
+      assert(v.isEmpty, s"${v.size} plan-invariant violations:\n  ${v.mkString("\n  ")}")
+      assert(df.columns.nonEmpty, s"$name has empty schema")
+      assert(df.count() > 0, s"$name returned 0 rows")
+      passed += name
+    }
+  }
+
+  // the whitelist must not rot: every entry must still be needed. Only
+  // a full sweep can show an entry unused, so a partial one cancels.
+  test("whitelists do not rot: every BNLJ and global-window entry is used by its query's plan") {
+    info(s"checked $checked plans; BNLJ whitelist used: ${usedBnlj.size}/${bnljWhitelist.size}; " +
+      s"global-window whitelist used: ${usedGw.size}/${globalWindowWhitelist.size}")
+    val total = SparkEntry.queries.size
+    if (passed.size < total)
+      cancel(s"only ${passed.size} of $total per-query tests ran and passed")
+    val staleBnlj = bnljWhitelist.keySet -- usedBnlj
+    val staleGw = globalWindowWhitelist.keySet -- usedGw
+    assert(staleBnlj.isEmpty, s"stale BNLJ whitelist entries (no longer in plan): $staleBnlj")
+    assert(staleGw.isEmpty, s"stale global-window whitelist entries: $staleGw")
   }
 }
 
