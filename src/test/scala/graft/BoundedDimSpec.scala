@@ -19,7 +19,7 @@ class BoundedDimSpec extends SparkSpec {
     // on the real dimension frames (aggregates, unknown maxRows) the
     // limit survives and keeps the broadcast side scalar for the BNLJ
     // gate rule — machine-checked for all four call sites by
-    // PlanInvariantSpec's fleet sweep.
+    // QueriesSmokeSpec's fleet sweep.
   }
 
   test("over the bound: execution fails with the declared cap message") {

@@ -5,14 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.execution.{BaseSubqueryExec, CollectLimitExec, GlobalLimitExec, LocalLimitExec, TakeOrderedAndProjectExec}
 
-/** The one sweep of the whole registry: one test per registered
-  * query builds it once at sf0.001, machine-checks its PHYSICAL plan
-  * (the fleet-wide plan-invariant gate, r8 verdict task #1), then asserts
-  * that it has columns and returns rows. The plan check looks for
+/** The fleet-wide plan-invariant gate (r8 verdict task #1): the rules
+  * that `QueriesSmokeSpec`, the one sweep of the whole registry, applies
+  * to every registered query's PHYSICAL plan. They look for
   * the three patterns that sink a 100 TB run —
   *
   *  1. `CartesianProductExec` — a true cartesian product. Never
@@ -47,86 +45,11 @@ import org.apache.spark.sql.execution.{BaseSubqueryExec, CollectLimitExec, Globa
   * This converts the 173 benign-but-hand-audited `WindowExec: No
   * Partition Defined` warnings from "audited in rounds 3–8" into a
   * regression gate: the 508th row cannot silently introduce a global
-  * sort-the-corpus window or an n² join. A failing query fails its own
-  * test, named after it. A last test asserts that every whitelist entry
-  * is still used by its query's plan.
+  * sort-the-corpus window or an n² join. This suite pins the hardened
+  * window rule as a unit contract.
   */
 class PlanInvariantSpec extends SparkSpec {
-
-  /** query name -> one-line bound justification for a
-    * BroadcastNestedLoopJoinExec in its plan.
-    */
-  private val bnljWhitelist: Map[String, String] = PlanInvariantSpec.bnljWhitelist
-
-  /** query name -> one-line bound justification for an
-    * empty-partition window with no aggregate/limit below it.
-    */
-  private val globalWindowWhitelist: Map[String, String] =
-    PlanInvariantSpec.globalWindowWhitelist
-
-  private def hasBoundingNodeBelow(p: SparkPlan, aliases: Map[ExprId, Expression]): Boolean =
-    p.exists {
-      case a: BaseAggregateExec =>
-        a.groupingExpressions.isEmpty ||
-          a.groupingExpressions.forall(g =>
-            PlanInvariantSpec.isBoundedDomain(PlanInvariantSpec.resolveAliases(g, aliases)))
-      case _: GlobalLimitExec | _: LocalLimitExec => true
-      case _: CollectLimitExec | _: TakeOrderedAndProjectExec => true
-      case _ => false
-    }
-
-  /** exprId -> defining expression, collected from every Project,
-    * aggregate result list, and window expression list in the plan —
-    * lets the bounded-domain check see through `hour(ts) AS h`-style
-    * aliasing between the grouping and the source expression.
-    */
-  private def aliasMap(nodes: Seq[SparkPlan]): Map[ExprId, Expression] =
-    nodes.flatMap {
-      case p: org.apache.spark.sql.execution.ProjectExec =>
-        p.projectList.collect { case a: Alias => a.exprId -> a.child }
-      case a: BaseAggregateExec =>
-        a.resultExpressions.collect { case al: Alias => al.exprId -> al.child } ++
-          // result attributes of the aggregate functions themselves, so
-          // `min(date_trunc(...))` resolves to Min(TruncTimestamp(...))
-          // instead of dead-ending at an opaque attribute
-          a.aggregateExpressions.map(ae => ae.resultAttribute.exprId -> (ae: Expression))
-      case w: WindowExec =>
-        w.windowExpression.collect { case al: Alias => al.exprId -> al.child }
-      case g: org.apache.spark.sql.execution.GenerateExec =>
-        // map explode/sequence outputs to the generator itself, so
-        // exploding a literal grid (array(-1.0, ..., 1.0), sequence(0,
-        // 31)) proves bounded through the closure rule, while exploding
-        // corpus data stays unproven
-        g.generatorOutput.map(a => a.exprId -> (g.generator: Expression))
-      case _ => Seq.empty[(ExprId, Expression)]
-    }.toMap
-
-  /** Every physical node in the plan, descending through AQE wrappers
-    * and planned subquery expressions (both of which plain
-    * TreeNode.collect skips).
-    */
-  private def allNodes(root: SparkPlan): Seq[SparkPlan] = {
-    val direct = root.collect { case p => p }
-    direct ++ direct.flatMap { node =>
-      val aqe = node match {
-        case a: AdaptiveSparkPlanExec => allNodes(a.inputPlan)
-        case _ => Seq.empty
-      }
-      val subq = node.expressions.flatMap(_.collect {
-        case pe: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] =>
-          pe.plan match {
-            case sp: BaseSubqueryExec => allNodes(sp.child)
-            case sp: SparkPlan => allNodes(sp)
-            case _ => Seq.empty // unplanned logical subquery: nothing physical to check yet
-          }
-      }).flatten
-      aqe ++ subq
-    }
-  }
-
-  test("entry returns rows") {
-    assert(SparkEntry.entry(spark).count() > 0)
-  }
+  import PlanInvariantSpec.{aliasMap, allNodes, hasBoundingNodeBelow}
 
   /** The r11 verdict's gate gap, pinned as a unit contract: the old
     * "any aggregate below" rule legalized `stat_median_ci_exact`'s
@@ -170,82 +93,79 @@ class PlanInvariantSpec extends SparkSpec {
       .withColumn("cum", sum(col("c")).over(w))
     assert(!windowPasses(corpusGrid), "corpus-derived explode must be flagged")
   }
+}
+
+object PlanInvariantSpec {
+
+  def hasBoundingNodeBelow(p: SparkPlan, aliases: Map[ExprId, Expression]): Boolean =
+    p.exists {
+      case a: BaseAggregateExec =>
+        a.groupingExpressions.isEmpty ||
+          a.groupingExpressions.forall(g =>
+            isBoundedDomain(resolveAliases(g, aliases)))
+      case _: GlobalLimitExec | _: LocalLimitExec => true
+      case _: CollectLimitExec | _: TakeOrderedAndProjectExec => true
+      case _ => false
+    }
+
+  /** exprId -> defining expression, collected from every Project,
+    * aggregate result list, and window expression list in the plan —
+    * lets the bounded-domain check see through `hour(ts) AS h`-style
+    * aliasing between the grouping and the source expression.
+    */
+  def aliasMap(nodes: Seq[SparkPlan]): Map[ExprId, Expression] =
+    nodes.flatMap {
+      case p: org.apache.spark.sql.execution.ProjectExec =>
+        p.projectList.collect { case a: Alias => a.exprId -> a.child }
+      case a: BaseAggregateExec =>
+        a.resultExpressions.collect { case al: Alias => al.exprId -> al.child } ++
+          // result attributes of the aggregate functions themselves, so
+          // `min(date_trunc(...))` resolves to Min(TruncTimestamp(...))
+          // instead of dead-ending at an opaque attribute
+          a.aggregateExpressions.map(ae => ae.resultAttribute.exprId -> (ae: Expression))
+      case w: WindowExec =>
+        w.windowExpression.collect { case al: Alias => al.exprId -> al.child }
+      case g: org.apache.spark.sql.execution.GenerateExec =>
+        // map explode/sequence outputs to the generator itself, so
+        // exploding a literal grid (array(-1.0, ..., 1.0), sequence(0,
+        // 31)) proves bounded through the closure rule, while exploding
+        // corpus data stays unproven
+        g.generatorOutput.map(a => a.exprId -> (g.generator: Expression))
+      case _ => Seq.empty[(ExprId, Expression)]
+    }.toMap
+
+  /** Every physical node in the plan, descending through AQE wrappers
+    * and planned subquery expressions (both of which plain
+    * TreeNode.collect skips).
+    */
+  def allNodes(root: SparkPlan): Seq[SparkPlan] = {
+    val direct = root.collect { case p => p }
+    direct ++ direct.flatMap { node =>
+      val aqe = node match {
+        case a: AdaptiveSparkPlanExec => allNodes(a.inputPlan)
+        case _ => Seq.empty
+      }
+      val subq = node.expressions.flatMap(_.collect {
+        case pe: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] =>
+          pe.plan match {
+            case sp: BaseSubqueryExec => allNodes(sp.child)
+            case sp: SparkPlan => allNodes(sp)
+            case _ => Seq.empty // unplanned logical subquery: nothing physical to check yet
+          }
+      }).flatten
+      aqe ++ subq
+    }
+  }
 
   /** The child of an empty-partition `WindowExec` or
     * `WindowGroupLimitExec`: a single-task window over that child. */
-  private object GlobalWindow {
+  object GlobalWindow {
     def unapply(p: SparkPlan): Option[SparkPlan] = p match {
       case w: WindowExec if w.partitionSpec.isEmpty => Some(w.child)
       case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => Some(w.child)
       case _ => None
     }
   }
-
-  // Filled by the per-query tests, read by the rot check registered
-  // after them: the whitelist entries some plan needed, and the queries
-  // whose test ran to the end.
-  private val usedBnlj = collection.mutable.Set[String]()
-  private val usedGw = collection.mutable.Set[String]()
-  private val passed = collection.mutable.Set[String]()
-  private var checked = 0
-
-  /** The three rules over one query's plan. Records every whitelist
-    * entry the plan uses; returns the violations. */
-  private def violations(name: String, plan: SparkPlan): Seq[String] = {
-    val nodes = allNodes(plan)
-    val aliases = aliasMap(nodes)
-    nodes.flatMap {
-      case _: CartesianProductExec =>
-        Some(s"$name: CartesianProductExec (never allowed)")
-      case j: BroadcastNestedLoopJoinExec =>
-        val broadcastSide = j.buildSide match {
-          case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
-          case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
-        }
-        val scalarBroadcast = broadcastSide.exists {
-          case a: BaseAggregateExec => a.groupingExpressions.isEmpty // exactly 1 row
-          case _: GlobalLimitExec | _: LocalLimitExec => true
-          case _: CollectLimitExec | _: TakeOrderedAndProjectExec => true
-          case _ => false
-        }
-        if (scalarBroadcast) None
-        else if (bnljWhitelist.contains(name)) { usedBnlj += name; None }
-        else Some(s"$name: unlisted BroadcastNestedLoopJoinExec (${j.joinType}) with non-scalar broadcast side")
-      case w @ GlobalWindow(child) if !hasBoundingNodeBelow(child, aliases) =>
-        if (globalWindowWhitelist.contains(name)) { usedGw += name; None }
-        else Some(s"$name: empty-partition ${w.getClass.getSimpleName} without a provably bounded frame below")
-      case _ => None
-    }
-  }
-
-  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-    test(s"$name runs and returns rows") {
-      val df = fn(spark, sf)
-      val v = violations(name, df.queryExecution.executedPlan)
-      checked += 1
-      assert(v.isEmpty, s"${v.size} plan-invariant violations:\n  ${v.mkString("\n  ")}")
-      assert(df.columns.nonEmpty, s"$name has empty schema")
-      assert(df.count() > 0, s"$name returned 0 rows")
-      passed += name
-    }
-  }
-
-  // the whitelist must not rot: every entry must still be needed. Only
-  // a full sweep can show an entry unused, so a partial one cancels.
-  test("whitelists do not rot: every BNLJ and global-window entry is used by its query's plan") {
-    info(s"checked $checked plans; BNLJ whitelist used: ${usedBnlj.size}/${bnljWhitelist.size}; " +
-      s"global-window whitelist used: ${usedGw.size}/${globalWindowWhitelist.size}")
-    val total = SparkEntry.queries.size
-    if (passed.size < total)
-      cancel(s"only ${passed.size} of $total per-query tests ran and passed")
-    val staleBnlj = bnljWhitelist.keySet -- usedBnlj
-    val staleGw = globalWindowWhitelist.keySet -- usedGw
-    assert(staleBnlj.isEmpty, s"stale BNLJ whitelist entries (no longer in plan): $staleBnlj")
-    assert(staleGw.isEmpty, s"stale global-window whitelist entries: $staleGw")
-  }
-}
-
-object PlanInvariantSpec {
 
   /** Data-model columns whose value domain is a FIXED enum/dictionary,
     * independent of corpus size — the catalog metadata a production
